@@ -1,32 +1,64 @@
 """Similarity search over an embedding column (SURVEY.md §2B).
 
-Two physical strategies behind the same logical ask (top-k cosine
-neighbors per query vector):
+The query-side similarity queries answer one logical ask — top-k
+cosine neighbors for the stride-:data:`QUERY_STRIDE` query set — and
+share ONE protocol.  A family contributes only what is its own:
 
-- ``similarity_topk``     — brute force: broadcast the query set,
-  score every (query, candidate) pair, per-query top-k.  Exact; the
-  verification baseline.  Cost O(Q×N) — fine when Q is small or N is
-  sf-fixture sized.
-- ``similarity_ann_lsh``  — random-hyperplane LSH: bucket vectors by
-  sign-pattern, score only same-bucket pairs.  The 100 TB path: the
-  shuffle carries (vector, bucket) once, not Q×N scores.
+==========  ======================  ==============================  ============================
+family      trained model           row routing                     scorer
+==========  ======================  ==============================  ============================
+``exact``   —                       none                            exact cosine
+``lsh``     hyperplane matrix       :data:`LSH_PLANES`-bit sign     exact cosine
+                                    bucket, radius-1 multi-probe
+``ivf``     :func:`_ivf_centroids`  nearest centroid cell,          exact cosine
+                                    :data:`IVF_NPROBE` cells probed
+``pq``      :func:`_pq_codebooks`   none                            PQ ADC, then exact refine
+``ivf_pq``  both                    nearest centroid cell           PQ ADC, then exact refine
+==========  ======================  ==============================  ============================
 
-Scoring numerics: all three strategies score with numpy BLAS/einsum in
-float64 (the r7 rework moved ``similarity_ann_lsh`` off interpreted
-zip_with/aggregate folds — JVM-side but per-row-lambda evaluated, they
-cost more than the Arrow hop + a vectorized matmul).  BLAS summation
-order is NOT the left-fold order DuckDB's ``list_dot_product`` uses,
-so the two sides can differ in the last ulp; both round to 6 decimals
-before the top-k ordering, which makes the exact-hash oracles correct
-unless a true cosine lands within ~1e-16 of a 6-decimal rounding
-boundary AND the k-th/k+1-th candidates straddle it — vanishingly
-unlikely, but probabilistic, not guaranteed (it has held for every
-fixture vintage so far).
+Everything else exists once:
+
+- **Query side** (:func:`_query_state`): the query set is normalized,
+  routed to its probe buckets/cells and (ADC families) turned into
+  lookup tables, then broadcast ONCE per session — the broadcast lives
+  in the session model cache and ``registry.clear_model_cache``
+  destroys it.
+- **Scan** (:func:`_scan`): one ``mapInPandas`` corpus pass keeps a
+  partial top-``keep`` per query and Arrow batch under (score desc,
+  id asc), then ONE window merge (:func:`_merge`) — sound because
+  every global top-``keep`` member is a top-``keep`` member of its
+  own batch.  The corpus is never shuffled.
+- **Refine** (:func:`_refine`): the ADC families re-score their
+  global top-:data:`PQ_REFINE` candidates exactly.
+- **Membership** (:func:`_ann_membership`): per exact top-k member,
+  ``should_find`` = the member routes to a probed bucket/cell and, for
+  ADC families, its ADC rank is below :data:`PQ_REFINE` — recomputed
+  from the trained models, independent of the scan under test.
+- **Certificate** (:func:`family_certificate`): one body serves the four
+  registered certificates (``similarity_ann_lsh``, ``similarity_ivf``,
+  ``similarity_pq``, ``similarity_ivf_pq``); ``similarity_topk`` is
+  the ``exact`` family's neighbor relation itself.
+
+``broken=True`` is each family's deliberate test-only failure mode
+(LSH: queries hashed with shifted planes; IVF: farthest cells probed;
+PQ / IVF-PQ: negated lookup tables) — the certificate must falsify
+under it.
+
+Scoring numerics: cosine scores are float64 BLAS products rounded to
+6 decimals before the top-k ordering.  BLAS summation order is NOT the
+left-fold order DuckDB's ``list_dot_product`` uses, so the two sides
+can differ in the last ulp; the 6-decimal rounding makes the
+exact-hash oracles correct unless a true cosine lands within ~1e-16 of
+a rounding boundary AND the k-th/k+1-th candidates straddle it —
+vanishingly unlikely, but probabilistic, not guaranteed (it has held
+for every fixture vintage so far).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from typing import NamedTuple
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from s3_manifest_spark.registry import register, session_model_cache
@@ -43,6 +75,36 @@ QUERY_STRIDE = 100
 #: should arrive as its own DataFrame and run in MAX_QUERIES batches.
 MAX_QUERIES = 4096
 LSH_PLANES = 6
+LSH_MULTIPROBE = 1  # probe buckets within this signature Hamming radius
+#: Seed for the ANN-LSH hyperplanes (distinct from the dedup module's).
+LSH_SEED = 0xA11_5EED
+#: the LSH broken mode hashes queries with planes this far off the seed
+LSH_BROKEN_SEED_OFFSET = 17
+
+IVF_K = 8            # coarse centroids
+IVF_NPROBE = 2       # cells probed per query
+IVF_TRAIN_STRIDE = 2  # 1-in-N deterministic sample for quantizer training
+IVF_LLOYD_STEPS = 2
+
+PQ_M = 8             # subspaces (dim 64 -> 8 dims each)
+PQ_K = 16            # centroids per subspace -> 1 byte/code, 8 B/vector
+PQ_TRAIN_STRIDE = 2  # deterministic 1-in-N training sample (as IVF)
+PQ_LLOYD_STEPS = 4   # per-subspace k-means rounds
+PQ_REFINE = 32       # ADC candidates kept per query for exact re-scoring
+
+
+def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+
+
+def _batch_vectors(b):
+    """(ids, raw float64 vectors, unit-normalized vectors) of one
+    Arrow batch (or any pandas frame with vec_id/embedding)."""
+    import numpy as np
+
+    ids = b["vec_id"].to_numpy(dtype="int64")
+    e = np.stack(b["embedding"].to_numpy()).astype("float64")
+    return ids, e, e / np.linalg.norm(e, axis=1, keepdims=True)
 
 
 def _query_pdf(v):
@@ -77,101 +139,11 @@ def _query_pdf_cached(spark: SparkSession, sf_dir: str, v):
     return pdf
 
 
-@register(
-    "similarity_topk",
-    oracle=f"""
-    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-    q AS (SELECT vec_id AS query_id, e AS qe FROM v
-          WHERE vec_id % {QUERY_STRIDE} = 0 ORDER BY vec_id LIMIT {MAX_QUERIES}),
-    scored AS (
-      SELECT query_id, vec_id AS neighbor_id,
-             round(list_dot_product(qe, e)
-                   / (sqrt(list_dot_product(qe, qe)) * sqrt(list_dot_product(e, e))),
-                   6) AS cos_sim
-      FROM q JOIN v ON vec_id <> query_id
-    )
-    SELECT query_id, neighbor_id, cos_sim
-    FROM (
-      SELECT *, row_number() OVER (
-               PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id
-             ) AS rn
-      FROM scored
-    ) WHERE rn <= {TOP_K}
-    """,
-)
-def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact brute-force cosine top-k per query vector.
-
-    Physical strategy — broadcast-query matrix scoring with per-batch
-    partial top-k (same rewrite that took dedup_embedding from 68 s to
-    ~2 s): the small query matrix (N/{QUERY_STRIDE} unit-normalized
-    rows) is broadcast; each Arrow batch of the corpus computes one
-    BLAS ``block @ queriesᵀ`` and keeps only its local top-k per query
-    under the FINAL ordering (rounded score desc, neighbor_id asc) —
-    sound because every global top-k member is a top-k member of its
-    own batch.  The window then merges ≤ k·batches candidate rows per
-    query instead of N — the shuffle carries candidates, not scores.
-    No shuffle touches the corpus itself.
-    """
-    import numpy as np
-    import pandas as pd
-
-    v = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qpdf = _query_pdf_cached(spark, sf_dir, v)
-    qids = qpdf["vec_id"].to_numpy(dtype="int64")
-    qm = np.stack(qpdf["embedding"].to_numpy()).astype("float64")
-    qm /= np.linalg.norm(qm, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((qids, qm))
-    k = TOP_K
-
-    def score(batches):
-        ids_q, queries = bc.value
-        for batch in batches:
-            nids = batch["vec_id"].to_numpy(dtype="int64")
-            e = np.stack(batch["embedding"].to_numpy()).astype("float64")
-            e /= np.linalg.norm(e, axis=1, keepdims=True)
-            sims = np.round(e @ queries.T, 6)  # (batch, q)
-            out_q, out_n, out_s = [], [], []
-            for j, qid in enumerate(ids_q):
-                keep = nids != qid  # exclude self-match
-                cand_ids, cand_sims = nids[keep], sims[keep, j]
-                # exact partial top-k under (sim desc, neighbor_id asc)
-                order = np.lexsort((cand_ids, -cand_sims))[:k]
-                out_q.append(np.full(len(order), qid))
-                out_n.append(cand_ids[order])
-                out_s.append(cand_sims[order])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "cos_sim": np.concatenate(out_s),
-                }
-            )
-
-    scored = v.mapInPandas(
-        score, schema="query_id long, neighbor_id long, cos_sim double"
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.select("*", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= TOP_K)
-        .drop("rn")
-    )
-
-
-#: Seed for the ANN-LSH hyperplanes (distinct from the dedup module's).
-LSH_SEED = 0xA11_5EED
-
-
 def _lsh_plane_matrix(planes: int, dim: int, seed_offset: int = 0):
     """The canonical Gaussian hyperplane matrix — the SINGLE
     construction point for every signature derivation (executor
     kernels and the driver-side query-probe derivation in
-    :func:`similarity_ann_lsh_neighbors`), so the two sides can never
+    :class:`_Buckets`), so the two sides can never
     silently drift (VERDICT r17 item 6: a seed/shape mismatch between
     them would destroy recall with no loud failure; the broken-mode
     certificate test covers seed skew, this removes the hazard at the
@@ -202,9 +174,8 @@ def _ann_signatures(
     for the neighbors query at sf0.1).  Same construction as the dedup
     module's ``_lsh_band_rows`` with one band.
 
-    ``seed_offset`` exists for the certificate's broken-ANN test:
-    hashing queries with different planes than the corpus probes
-    unrelated buckets.  ``planes`` defaults to the query-ANN's
+    ``seed_offset`` shifts the plane matrix (the kNN-graph ANN hashes
+    with its own offset).  ``planes`` defaults to the query-ANN's
     :data:`LSH_PLANES`; the corpus-scale kNN-graph path passes its
     own corpus-size-adaptive count (:func:`_knn_ann_planes`)."""
     import numpy as np
@@ -232,379 +203,426 @@ def _ann_signatures(
     return v.mapInPandas(kernel, schema=schema)
 
 
-IVF_K = 8            # coarse centroids
-IVF_NPROBE = 2       # cells probed per query
-IVF_TRAIN_STRIDE = 2  # 1-in-N deterministic sample for quantizer training
-IVF_LLOYD_STEPS = 2
+# ---------------------------------------------------------------------------
+# Family models: distributed Lloyd training and row routing
+# ---------------------------------------------------------------------------
 
 
-def _ivf_centroids(spark: SparkSession, sf_dir: str):
-    """The trained IVF coarse quantizer (K × dim float64), distributed
-    Lloyd over a deterministic 1-in-:data:`IVF_TRAIN_STRIDE` sample —
-    factored out of :func:`similarity_ivf_neighbors` (r13) so the
-    IVF-PQ composition shares ONE quantizer model.
-
-    The trained quantizer is cached per (session, sf_dir): an ANN
-    index is built once and queried many times — that lifecycle, not
+def _lloyd(spark, sf_dir, key, groups, k, stride, steps, assign):
+    """Distributed Lloyd training shared by the IVF quantizer and the
+    PQ codebooks, session-cached under ``(key, sf_dir)``: an ANN index
+    is built once and queried many times — that lifecycle, not
     per-query retraining, is the system being modeled (FAISS trains
-    IVF once).  Deterministic (seed round vec_id % K, stable argmax),
-    so a cached quantizer is value-identical to a retrained one; the
-    cache dies with the session and is NOT the plan memo the bench
-    harnesses clear (training is work the DuckDB oracle never does,
-    so amortizing it skews no comparison).  Each Lloyd round is the
-    treeAggregate shape: every Arrow batch assigns its vectors to
-    cells and emits ONE partial row per cell — (cell, count,
-    component sum) — so the driver combines at most K·partitions
-    short rows per round and never sees a sample vector; driver
-    memory is O(K·d), independent of sample and corpus size.
-    """
+    once, on a corpus sample, because the quantizer only needs the
+    density shape).
+
+    The unit-normalized vectors of a deterministic 1-in-``stride``
+    sample split into ``groups`` equal subspaces of ``k`` cells each.
+    The seed round assigns cell = vec_id % k in every subspace; later
+    rounds call ``assign(en, model)`` → (rows × groups) cells.  Each
+    round is the treeAggregate shape: every Arrow batch emits ONE
+    partial row per occupied (subspace, cell) — (count, component sum)
+    — so the driver combines at most groups·k·partitions short rows
+    and never sees a sample vector (driver memory O(k·d)).  Empty cells
+    keep their previous centroid.  Returns (groups, k, dim/groups)
+    float64 — squeezed to (k, dim) for one group."""
     import numpy as np
     import pandas as pd
 
     from s3_manifest_spark.registry import track_persist
 
-    model_cache = session_model_cache(spark)
-    cached_cent = model_cache.get(("ivf", sf_dir))
-    if cached_cent is not None:
-        return cached_cent
-    v = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    tr = track_persist(v.filter(F.col("vec_id") % IVF_TRAIN_STRIDE == 0))
-    cent: np.ndarray | None = None  # None -> seed round (vec_id % K)
+    mc = session_model_cache(spark)
+    cached = mc.get((key, sf_dir))
+    if cached is not None:
+        return cached
+    tr = track_persist(
+        _embeddings(spark, sf_dir).filter(F.col("vec_id") % stride == 0)
+    )
+    model = None  # (groups, k, dsub); None -> seed round
 
-    def lloyd_partials(cents):
+    def partials(cur):
         def gen(batches):
             for b in batches:
-                ids = b["vec_id"].to_numpy(dtype="int64")
-                e = np.stack(b["embedding"].to_numpy()).astype("float64")
-                en = e / np.linalg.norm(e, axis=1, keepdims=True)
-                if cents is None:
-                    cells = (ids % IVF_K).astype("int64")
-                else:
-                    cn = cents / np.maximum(
-                        np.linalg.norm(cents, axis=1, keepdims=True), 1e-12
+                ids, _, en = _batch_vectors(b)
+                if en.shape[1] % groups:
+                    raise ValueError(
+                        f"embedding dim {en.shape[1]} not divisible by "
+                        f"{groups} subspaces"
                     )
-                    cells = np.argmax(en @ cn.T, axis=1)  # ties -> lowest
-                # one pass over the block: bincount for sizes,
-                # add.at for per-cell component sums (vs a masked
-                # rescan per occupied cell — K passes)
-                counts = np.bincount(cells, minlength=IVF_K)
-                sums = np.zeros((IVF_K, en.shape[1]))
-                np.add.at(sums, cells, en)
-                uniq = np.nonzero(counts)[0]
+                dsub = en.shape[1] // groups
+                if cur is None:
+                    cells = np.repeat((ids % k)[:, None], groups, axis=1)
+                else:
+                    cells = assign(en, cur)
+                out_g, out_c, out_n, out_s = [], [], [], []
+                for g in range(groups):
+                    xg = en[:, g * dsub : (g + 1) * dsub]
+                    # one pass over the block: bincount for sizes,
+                    # add.at for per-cell component sums
+                    counts = np.bincount(cells[:, g], minlength=k)
+                    sums = np.zeros((k, dsub))
+                    np.add.at(sums, cells[:, g], xg)
+                    uniq = np.nonzero(counts)[0]
+                    out_g.append(np.full(len(uniq), g))
+                    out_c.append(uniq)
+                    out_n.append(counts[uniq])
+                    out_s.extend(sums[c].tolist() for c in uniq)
                 yield pd.DataFrame(
                     {
-                        "cell": uniq.astype("int32"),
-                        "n": counts[uniq].astype("int64"),
-                        "s": [sums[c].tolist() for c in uniq],
+                        "g": np.concatenate(out_g).astype("int32"),
+                        "cell": np.concatenate(out_c).astype("int32"),
+                        "n": np.concatenate(out_n).astype("int64"),
+                        "s": out_s,
                     }
                 )
 
         return gen
 
-    for _ in range(IVF_LLOYD_STEPS):
-        partials = tr.mapInPandas(
-            lloyd_partials(cent), schema="cell int, n long, s array<double>"
-        ).collect()  # <= K * partitions short rows
-        dim = len(partials[0]["s"])
-        sums = np.zeros((IVF_K, dim))
-        counts = np.zeros(IVF_K)
-        for r in partials:
-            sums[r["cell"]] += np.asarray(r["s"])
-            counts[r["cell"]] += r["n"]
-        new_cent = np.zeros((IVF_K, dim)) if cent is None else cent.copy()
+    for _ in range(steps):
+        rows = tr.mapInPandas(
+            partials(model), schema="g int, cell int, n long, s array<double>"
+        ).collect()  # <= groups * k * partitions short rows
+        dsub = len(rows[0]["s"])
+        sums = np.zeros((groups, k, dsub))
+        counts = np.zeros((groups, k))
+        for r in rows:
+            sums[r["g"], r["cell"]] += np.asarray(r["s"])
+            counts[r["g"], r["cell"]] += r["n"]
+        new = np.zeros((groups, k, dsub)) if model is None else model.copy()
         nz = counts > 0
-        new_cent[nz] = sums[nz] / counts[nz, None]  # empty cells keep previous
-        cent = new_cent
-    model_cache[("ivf", sf_dir)] = cent
-    return cent
+        new[nz] = sums[nz] / counts[nz][:, None]  # empty cells keep previous
+        model = new
+    out = model[0] if groups == 1 else model
+    mc[(key, sf_dir)] = out
+    return out
 
 
-def similarity_ivf_neighbors(
-    spark: SparkSession,
-    sf_dir: str,
-    probe_farthest: bool = False,
-    with_membership: bool = False,
-    exact: DataFrame | None = None,
-):
-    """IVF (inverted-file) approximate top-k, FAISS-style split:
+def _ivf_centroids(spark: SparkSession, sf_dir: str):
+    """The trained IVF coarse quantizer (:data:`IVF_K` × dim float64):
+    :func:`_lloyd` with one group, cells assigned by cosine argmax —
+    ONE quantizer model shared by the IVF and IVF-PQ families."""
+    return _lloyd(
+        spark, sf_dir, "ivf", 1, IVF_K, IVF_TRAIN_STRIDE, IVF_LLOYD_STEPS,
+        lambda en, model: _Cells(model[0]).route(None, en)[:, None],
+    )
 
-    1. TRAIN (distributed): {IVF_LLOYD_STEPS} Lloyd rounds over a
-       deterministic 1-in-{IVF_TRAIN_STRIDE} sample — exactly how
-       FAISS trains IVF on a corpus sample, because the quantizer only
-       needs the density shape, not every row.  Each round is the
-       treeAggregate shape: every Arrow batch assigns its vectors to
-       cells (seed round: vec_id % K; later rounds: one BLAS matmul
-       against the broadcast centroids) and emits ONE partial row per
-       cell — (cell, member count, component sum) — so the driver
-       combines at most K·partitions short rows per round and never
-       sees a sample vector.  Driver memory is O(K·d), independent of
-       sample and corpus size.
-    2. SEARCH (one distributed pass): centroids + query matrix +
-       per-query probe cells are broadcast; each Arrow batch assigns
-       its vectors to cells (one BLAS matmul), scores only the rows
-       whose cell is probed by some query, and emits its local top-k
-       per query.  A final window merges ≤ k·batches candidates.
 
-    The corpus is never shuffled and never collected.  The only
-    driver-side row materializations are the per-round Lloyd partials
-    (≤ K·partitions) and the query set (N/{QUERY_STRIDE} rows,
-    bounded and documented).  Recall tunes via IVF_K / IVF_NPROBE as
-    in IVF-Flat.
-    """
+def _pq_codebooks(spark: SparkSession, sf_dir: str):
+    """Per-subspace PQ codebooks ((:data:`PQ_M`, :data:`PQ_K`, dim/M)
+    float64): :func:`_lloyd` with one group per subspace, cells
+    assigned by L2 argmin (:func:`_pq_encode`) — ALL subspaces learn in
+    each single pass.  Everything downstream (codes, ADC ranks, the
+    certificate) derives from this one cached array, so the emitted
+    relation is self-consistent in any environment."""
+    return _lloyd(
+        spark, sf_dir, "pq", PQ_M, PQ_K, PQ_TRAIN_STRIDE, PQ_LLOYD_STEPS,
+        _pq_encode,
+    )
+
+
+def _pq_encode(en, books):
+    """codes[i, m] = nearest codebook cell of row i's m-th subvector
+    (ties -> lowest cell).  ``en`` must already be unit-normalized."""
     import numpy as np
-    import pandas as pd
 
-    v = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cent = _ivf_centroids(spark, sf_dir)
-    centn = cent / np.maximum(np.linalg.norm(cent, axis=1, keepdims=True), 1e-12)
+    dsub = books.shape[2]
+    codes = np.empty((en.shape[0], books.shape[0]), dtype=np.int64)
+    for m, cm in enumerate(books):
+        xm = en[:, m * dsub : (m + 1) * dsub]
+        # argmin ||x-c||^2 = argmin(-2 x·c + ||c||^2)
+        d = -2.0 * (xm @ cm.T) + (cm * cm).sum(axis=1)
+        codes[:, m] = np.argmin(d, axis=1)
+    return codes
 
-    # -- query probe lists (queries are corpus rows; tiny, driver-side)
-    qpdf = _query_pdf_cached(spark, sf_dir, v)
+
+def _pq_adc(codes, lut_q):
+    """ADC score of every coded row against ONE query's LUT
+    ((M, K) table): Σ_m lut[m, code_m], summed in fixed subspace order
+    so the float result is independent of batching/partitioning."""
+    s = lut_q[0, codes[:, 0]]
+    for m in range(1, PQ_M):
+        s = s + lut_q[m, codes[:, m]]
+    return s
+
+
+class _Buckets:
+    """LSH routing: a row's bucket is its :data:`LSH_PLANES`-bit sign
+    pattern under the canonical planes (collision probability rises
+    with cosine similarity); a query probes its own bucket plus every
+    bucket within Hamming radius :data:`LSH_MULTIPROBE` — a near
+    neighbor's most likely disagreement is ONE flipped hyperplane, so
+    the 1-bit-flip buckets buy most of a second table's recall for
+    zero extra corpus state.  Broken mode hashes the queries with
+    shifted planes, so they probe unrelated buckets."""
+
+    def __init__(self, dim: int):
+        import numpy as np
+
+        self.planes = _lsh_plane_matrix(LSH_PLANES, dim)
+        self.powers = 1 << np.arange(LSH_PLANES, dtype=np.int64)
+
+    @classmethod
+    def build(cls, spark, sf_dir, dim):
+        return cls(dim)
+
+    def route(self, e, en):
+        return (((e @ self.planes.T) > 0) * self.powers).sum(axis=1)
+
+    def probes(self, qm, qn, broken):
+        import numpy as np
+
+        planes = _lsh_plane_matrix(
+            LSH_PLANES, qm.shape[1], LSH_BROKEN_SEED_OFFSET if broken else 0
+        )
+        sigs = (((qm @ planes.T) > 0) * self.powers).sum(axis=1)
+        flips = self.powers if LSH_MULTIPROBE >= 1 else np.empty(0, np.int64)
+        return [np.concatenate(([s], s ^ flips)) for s in sigs.astype("int64")]
+
+
+class _Cells:
+    """IVF routing: a row's cell is its nearest (cosine) centroid; a
+    query probes its :data:`IVF_NPROBE` nearest cells.  Broken mode
+    probes the farthest cells instead."""
+
+    def __init__(self, cent):
+        import numpy as np
+
+        self.centn = cent / np.maximum(
+            np.linalg.norm(cent, axis=1, keepdims=True), 1e-12
+        )
+
+    @classmethod
+    def build(cls, spark, sf_dir, dim):
+        return cls(_ivf_centroids(spark, sf_dir))
+
+    def route(self, e, en):
+        import numpy as np
+
+        return np.argmax(en @ self.centn.T, axis=1)  # ties -> lowest
+
+    def probes(self, qm, qn, broken):
+        import numpy as np
+
+        sign = 1.0 if broken else -1.0
+        order = np.argsort(sign * (qn @ self.centn.T), kind="stable", axis=1)
+        return order[:, :IVF_NPROBE]
+
+
+#: family -> (router class or None, ADC scorer)
+_FAMILIES = {
+    "exact": (None, False),
+    "lsh": (_Buckets, False),
+    "ivf": (_Cells, False),
+    "pq": (None, True),
+    "ivf_pq": (_Cells, True),
+}
+
+
+# ---------------------------------------------------------------------------
+# The protocol: query state, scan, merge, refine, membership, certificate
+# ---------------------------------------------------------------------------
+
+
+class _QueryState(NamedTuple):
+    ids: object  # (Q,) int64 query vec_ids
+    vecs: object  # (Q, dim) unit-normalized query vectors
+    router: object  # _Buckets | _Cells | None
+    probes: object  # per query: probed bucket/cell ids (None: no routing)
+    books: object  # PQ codebooks (None: cosine scorer)
+    lut: object  # (Q, M, K) ADC lookup tables (None: cosine scorer)
+
+
+def _query_state(
+    spark: SparkSession, sf_dir: str, family: str, broken: bool = False
+):
+    """The broadcast :class:`_QueryState` of ``family`` — SESSION
+    STATE, not per-call state (ADVICE r17: a fresh broadcast per warm
+    serving call accumulated never-destroyed broadcast blocks on the
+    driver and executors).  Built once per (sf_dir, family, broken)
+    from the session-cached query set and the family's trained models;
+    destroyed by ``registry.clear_model_cache``.  ``broken`` breaks the
+    scorer of ADC families (negated lookup tables rank the WORST
+    candidates first) and the router of the others."""
+    import numpy as np
+
+    mc = session_model_cache(spark)
+    key = (f"ann_query_{family}", sf_dir, broken)
+    bc = mc.get(key)
+    if bc is not None:
+        return bc
+    router_cls, adc = _FAMILIES[family]
+    qpdf = _query_pdf_cached(spark, sf_dir, _embeddings(spark, sf_dir))
     qids = qpdf["vec_id"].to_numpy(dtype="int64")
     qm = np.stack(qpdf["embedding"].to_numpy()).astype("float64")
-    qm /= np.linalg.norm(qm, axis=1, keepdims=True)
-    qsims = qm @ centn.T
-    # probe_farthest=True is the deliberate BROKEN mode the certificate
-    # test uses: probing the least-similar cells drops probed exact
-    # members, which must flip ann_complete_ok to false.
-    order_sign = 1.0 if probe_farthest else -1.0
-    probes = np.argsort(order_sign * qsims, kind="stable", axis=1)[:, :IVF_NPROBE]
-    bc = spark.sparkContext.broadcast((qids, qm, probes, centn))
-    k = TOP_K
-
-    def score(batches):
-        ids_q, queries, probe_cells, cents = bc.value
-        for batch in batches:
-            nids = batch["vec_id"].to_numpy(dtype="int64")
-            e = np.stack(batch["embedding"].to_numpy()).astype("float64")
-            en = e / np.linalg.norm(e, axis=1, keepdims=True)
-            cells = np.argmax(en @ cents.T, axis=1)
-            sims = np.round(en @ queries.T, 6)
-            out_q, out_n, out_s = [], [], []
-            for j, qid in enumerate(ids_q):
-                keep = np.isin(cells, probe_cells[j]) & (nids != qid)
-                if not keep.any():
-                    continue
-                cand_ids, cand_sims = nids[keep], sims[keep, j]
-                order = np.lexsort((cand_ids, -cand_sims))[:k]
-                out_q.append(np.full(len(order), qid))
-                out_n.append(cand_ids[order])
-                out_s.append(cand_sims[order])
-            if not out_q:
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "cos_sim": np.concatenate(out_s),
-                }
-            )
-
-    scored = v.mapInPandas(
-        score, schema="query_id long, neighbor_id long, cos_sim double"
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    topk = (
-        scored.select("*", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= TOP_K)
-        .drop("rn")
-    )
-    if not with_membership:
-        return topk
-
-    # Canonical membership for the completeness certificate: per exact
-    # top-k member, is its centroid cell among the query's NEAREST
-    # nprobe cells (canonical regardless of probe_farthest)?  Member
-    # cells are recomputed on the broadcast-semi-filtered corpus
-    # (O(k·queries) rows); the probe lists are driver-side,
-    # query-cap-bounded data.
-    canonical = np.argsort(-qsims, kind="stable", axis=1)[:, :IVF_NPROBE]
-    probe_df = spark.createDataFrame(
-        [
-            (int(q), [int(c) for c in canonical[i]])
-            for i, q in enumerate(qids)
-        ],
-        schema="query_id long, probe_cells array<int>",
-    )
-    if exact is None:
-        exact = similarity_topk(spark, sf_dir)
-    exact_ids = exact.select("query_id", "neighbor_id")
-    memb_src = v.join(
-        F.broadcast(
-            exact_ids.select(F.col("neighbor_id").alias("vec_id")).distinct()
-        ),
-        "vec_id",
-    )
-
-    def cells(batches):
-        _, _, _, cents = bc.value
-        for b in batches:
-            ids = b["vec_id"].to_numpy(dtype="int64")
-            e = np.stack(b["embedding"].to_numpy()).astype("float64")
-            en = e / np.linalg.norm(e, axis=1, keepdims=True)
-            yield pd.DataFrame(
-                {
-                    "neighbor_id": ids,
-                    "ncell": np.argmax(en @ cents.T, axis=1).astype("int32"),
-                }
-            )
-
-    nc = memb_src.mapInPandas(cells, schema="neighbor_id long, ncell int")
-    membership = (
-        exact_ids.join(F.broadcast(nc), "neighbor_id")
-        .join(F.broadcast(probe_df), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.array_contains(
-                F.col("probe_cells"), F.col("ncell")
-            ).alias("should_find"),
+    qn = qm / np.linalg.norm(qm, axis=1, keepdims=True)
+    router = probes = books = lut = None
+    if router_cls is not None:
+        router = router_cls.build(spark, sf_dir, qm.shape[1])
+        probes = router.probes(qm, qn, broken and not adc)
+    if adc:
+        books = _pq_codebooks(spark, sf_dir)
+        dsub = books.shape[2]
+        # lut[q, m, c] = q_m · books[m, c]
+        lut = np.stack(
+            [qn[:, m * dsub : (m + 1) * dsub] @ books[m].T for m in range(PQ_M)],
+            axis=1,
         )
+        if broken:
+            lut = -lut
+    bc = spark.sparkContext.broadcast(
+        _QueryState(qids, qn, router, probes, books, lut)
     )
-    return topk, membership
+    mc[key] = bc
+    return bc
 
 
-LSH_MULTIPROBE = 1  # probe buckets within this signature Hamming radius
-
-
-def similarity_ann_lsh_neighbors(
-    spark: SparkSession, sf_dir: str, query_seed_offset: int = 0
-) -> DataFrame:
-    """Approximate NN via random-hyperplane LSH buckets, multi-probe.
-
-    Each vector gets a {LSH_PLANES}-bit sign signature; each query
-    probes its own bucket plus every bucket within Hamming radius
-    {LSH_MULTIPROBE} of its signature (the standard multi-probe trick:
-    a near neighbor's most likely disagreement is ONE flipped
-    hyperplane, so probing the 1-bit-flip buckets buys most of a
-    second hash table's recall for zero extra corpus state).  Only the
-    tiny QUERY side fans out (1+planes probe buckets per query),
-    driver-resident and broadcast as a variable.
-
-    At 100 TB: ONE narrow corpus pass (no shuffle, no join — the
-    kernel computes each batch's signatures, tests probe membership
-    against the broadcast query probes, scores only probed rows, and
-    keeps its local top-k under the final ordering), then a window
-    merge over ≤ k·batches candidate rows per query.  Scoring cost is
-    probed-bucket occupancy, not N.  Recall/cost tunes via LSH_PLANES
-    (bucket granularity) and LSH_MULTIPROBE (probe fan-out).
-    """
+def _scan(v: DataFrame, bc, keep: int) -> DataFrame:
+    """ONE narrow corpus pass: each Arrow batch routes its rows,
+    scores every query against the rows routed to its probes (exact
+    cosine: one BLAS ``block @ queriesᵀ``; ADC: one encode + table
+    lookups), and emits its local top-``keep`` per query under (score
+    desc, neighbor_id asc).  Scoring cost is probed occupancy, and no
+    shuffle touches the corpus."""
     import numpy as np
     import pandas as pd
 
-    v = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # Query side is driver-resident (r17, the IVF/_knn_query_probes
-    # precedent): signatures + radius-1 probe sets are derived from the
-    # session-cached query set with the SAME RandomState plane
-    # construction _ann_signatures uses, then broadcast as a variable —
-    # the former query-side DataFrame (scan + sort + limit + signature
-    # kernel) launched a full broadcast-build job per call, and the
-    # probe equi-join fanned the corpus through a join just to decide
-    # bucket membership a kernel can test with one np.isin.  The sweep
-    # is now ONE mapInPandas pass over the corpus (signature + probe
-    # test + scoring + per-batch partial top-k under the final
-    # ordering), with the window merging ≤ k·batches candidates per
-    # query — the similarity_topk/IVF physical shape.  Arithmetic is
-    # unchanged: same float64 per-row dot products (einsum, no BLAS
-    # reassociation), same 6-dp rounding, same (rounded sim desc, id
-    # asc) order; per-batch top-k is sound because every global top-k
-    # member is a top-k member of its own batch.
-    #
-    # query_seed_offset != 0 is the deliberate BROKEN mode the
-    # certificate test uses: queries hashed with different planes than
-    # the corpus probe unrelated buckets, collapsing recall to ~random.
-    powers = 1 << np.arange(LSH_PLANES, dtype=np.int64)
-    # The (~2 MB) query-probe broadcast is SESSION STATE, not per-call
-    # state (ADVICE r17): a fresh sparkContext.broadcast per warm
-    # serving call accumulated never-destroyed broadcast blocks on the
-    # driver and executors until the returned frame's closure was
-    # GC'd.  Cache it beside the query frame it derives from, keyed by
-    # the seed offset (the broken-mode tests shift it); destroyed by
-    # registry.clear_model_cache (Broadcast values are destroy()'d).
-    mc = _mc(spark)
-    bc_key = ("lsh_query_probes", sf_dir, query_seed_offset)
-    bc = mc.get(bc_key)
-    if bc is None:
-        qpdf = _query_pdf_cached(spark, sf_dir, v)
-        qids = qpdf["vec_id"].to_numpy(dtype="int64")
-        qm = np.stack(qpdf["embedding"].to_numpy()).astype("float64")
-        qplanes = _lsh_plane_matrix(
-            LSH_PLANES, qm.shape[1], query_seed_offset
-        )
-        qsigs = (((qm @ qplanes.T) > 0) * powers).sum(axis=1).astype("int64")
-        # probe set per query: own signature + the LSH_PLANES 1-bit
-        # flips (radius 1; deeper radii would chain the same expansion)
-        flips = (1 << np.arange(LSH_PLANES, dtype=np.int64)) if LSH_MULTIPROBE >= 1 else np.empty(0, dtype=np.int64)
-        probe_sets = [np.concatenate(([s], s ^ flips)) for s in qsigs]
-        qn = qm / np.linalg.norm(qm, axis=1, keepdims=True)
-        bc = spark.sparkContext.broadcast((qids, qn, probe_sets))
-        mc[bc_key] = bc
-    k = TOP_K
+    score_col = "adc" if bc.value.lut is not None else "cos_sim"
 
     def score(batches):
-        empty = pd.DataFrame(
-            {
-                "query_id": np.empty(0, dtype=np.int64),
-                "neighbor_id": np.empty(0, dtype=np.int64),
-                "cos_sim": np.empty(0, dtype=np.float64),
-            }
-        )
-        planes = None
-        ids_q, queries, probes = bc.value
+        st = bc.value
         for b in batches:
             if not len(b):
-                yield empty
                 continue
-            ids = b["vec_id"].to_numpy(dtype="int64")
-            e = np.stack(b["embedding"].to_numpy()).astype("float64")
-            if planes is None:
-                # corpus planes are ALWAYS the canonical seed — only
-                # the query side shifts in broken mode, as before;
-                # same construction point as the driver-side probes
-                planes = _lsh_plane_matrix(LSH_PLANES, e.shape[1])
-            sigs = (((e @ planes.T) > 0) * powers).sum(axis=1)
-            en = e / np.linalg.norm(e, axis=1, keepdims=True)
+            ids, e, en = _batch_vectors(b)
+            routed = None if st.router is None else st.router.route(e, en)
+            if st.lut is None:
+                sims = np.round(en @ st.vecs.T, 6)  # (batch, q)
+            else:
+                codes = _pq_encode(en, st.books)
             out_q, out_n, out_s = [], [], []
-            for j, qid in enumerate(ids_q):
-                keep = np.isin(sigs, probes[j]) & (ids != qid)
-                if not keep.any():
+            for j, qid in enumerate(st.ids):
+                mask = ids != qid  # exclude self-match
+                if routed is not None:
+                    mask &= np.isin(routed, st.probes[j])
+                if not mask.any():
                     continue
-                sims = np.round(
-                    np.einsum("ij,j->i", en[keep], queries[j]), 6
-                )
-                cand_ids = ids[keep]
-                order = np.lexsort((cand_ids, -sims))[:k]
+                cand = ids[mask]
+                if st.lut is None:
+                    s = sims[mask, j]
+                else:
+                    s = _pq_adc(codes[mask], st.lut[j])
+                order = np.lexsort((cand, -s))[:keep]
                 out_q.append(np.full(len(order), qid, dtype=np.int64))
-                out_n.append(cand_ids[order])
-                out_s.append(sims[order])
-            if not out_q:
-                yield empty
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "cos_sim": np.concatenate(out_s),
-                }
-            )
+                out_n.append(cand[order])
+                out_s.append(s[order])
+            if out_q:
+                yield pd.DataFrame(
+                    {
+                        "query_id": np.concatenate(out_q),
+                        "neighbor_id": np.concatenate(out_n),
+                        score_col: np.concatenate(out_s),
+                    }
+                )
 
-    scored = v.mapInPandas(
-        score, schema="query_id long, neighbor_id long, cos_sim double"
+    return v.mapInPandas(
+        score, schema=f"query_id long, neighbor_id long, {score_col} double"
     )
-    from pyspark.sql import Window
 
+
+def _merge(scored: DataFrame, keep: int) -> DataFrame:
+    """Global top-``keep`` per query from per-batch partials: a window
+    over ≤ keep·batches candidate rows per query, never N."""
+    score = "adc" if "adc" in scored.columns else "cos_sim"
     w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
+        F.col(score).desc(), F.col("neighbor_id")
     )
     return (
         scored.select("*", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= TOP_K)
+        .filter(F.col("rn") <= keep)
         .drop("rn")
     )
+
+
+def _refine(v: DataFrame, bc, cands: DataFrame) -> DataFrame:
+    """Exact re-scoring of the ADC candidates: corpus rows joined to the
+    BROADCAST candidate list (candidate-bounded, never a corpus
+    shuffle), exact rounded cosine per (query, candidate), final
+    top-:data:`TOP_K` per query."""
+    import numpy as np
+    import pandas as pd
+
+    src = v.withColumnRenamed("vec_id", "neighbor_id").join(
+        F.broadcast(cands.select("query_id", "neighbor_id")), "neighbor_id"
+    )
+
+    def refine(batches):
+        st = bc.value
+        qrow = {int(q): i for i, q in enumerate(st.ids)}
+        for b in batches:
+            if not len(b):
+                continue
+            e = np.stack(b["embedding"].to_numpy()).astype("float64")
+            en = e / np.linalg.norm(e, axis=1, keepdims=True)
+            qi = np.array(
+                [qrow[int(q)] for q in b["query_id"].to_numpy()], dtype=np.int64
+            )
+            yield pd.DataFrame(
+                {
+                    "query_id": b["query_id"].to_numpy().astype("int64"),
+                    "neighbor_id": b["neighbor_id"].to_numpy().astype("int64"),
+                    "cos_sim": np.round(np.einsum("ij,ij->i", st.vecs[qi], en), 6),
+                }
+            )
+
+    refined = src.mapInPandas(
+        refine, schema="query_id long, neighbor_id long, cos_sim double"
+    )
+    return _merge(refined, TOP_K)
+
+
+def ann_neighbors(
+    spark: SparkSession, sf_dir: str, family: str, broken: bool = False
+) -> DataFrame:
+    """``(query_id, neighbor_id, cos_sim)``: the top-:data:`TOP_K`
+    neighbors of ``family`` (see the module table) — scan + merge, and
+    for the ADC families a top-:data:`PQ_REFINE` scan + merge followed
+    by the exact refine.  ``broken`` selects the family's test-only
+    broken mode."""
+    v = _embeddings(spark, sf_dir)
+    bc = _query_state(spark, sf_dir, family, broken)
+    if _FAMILIES[family][1]:
+        return _refine(v, bc, _merge(_scan(v, bc, PQ_REFINE), PQ_REFINE))
+    return _merge(_scan(v, bc, TOP_K), TOP_K)
+
+
+@register(
+    "similarity_topk",
+    oracle=f"""
+    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+    q AS (SELECT vec_id AS query_id, e AS qe FROM v
+          WHERE vec_id % {QUERY_STRIDE} = 0 ORDER BY vec_id LIMIT {MAX_QUERIES}),
+    scored AS (
+      SELECT query_id, vec_id AS neighbor_id,
+             round(list_dot_product(qe, e)
+                   / (sqrt(list_dot_product(qe, qe)) * sqrt(list_dot_product(e, e))),
+                   6) AS cos_sim
+      FROM q JOIN v ON vec_id <> query_id
+    )
+    SELECT query_id, neighbor_id, cos_sim
+    FROM (
+      SELECT *, row_number() OVER (
+               PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id
+             ) AS rn
+      FROM scored
+    ) WHERE rn <= {TOP_K}
+    """,
+)
+def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact brute-force cosine top-k per query vector: the ``exact``
+    family (no routing, cosine scorer) — the verification baseline of
+    every ANN certificate."""
+    return ann_neighbors(spark, sf_dir, "exact")
+
 
 #: DuckDB twin of the certificates' exact side — the SAME scored/topk
 #: construction as similarity_topk's oracle, aggregated to the k-th
@@ -612,7 +630,7 @@ def similarity_ann_lsh_neighbors(
 #: the oracle side BY DESIGN: DuckDB cannot re-run the engine-seeded
 #: ANN, so the flag's invariant arithmetic is pinned by the local
 #: broken-ANN test
-#: tests/test_llm_ops.py::test_ann_certificates_detect_broken_ann,
+#: tests/test_similarity.py::test_certificate_falsifies_broken_ann,
 #: and the hash check proves the flag ACTUALLY came out true on the
 #: Spark side (plus full query coverage and an independently
 #: recomputed exact_kth_sim per query).
@@ -643,11 +661,6 @@ GROUP BY query_id
 """
 
 
-def _mc(spark: SparkSession) -> dict:
-    mc = session_model_cache(spark)
-    return mc
-
-
 def _membership_cached(
     spark: SparkSession,
     sf_dir: str,
@@ -663,8 +676,8 @@ def _membership_cached(
     once per session alongside the quantizer it derives from,
     persisted (k·queries tiny rows), released by
     ``registry.clear_model_cache``, cold build priced in cold_sec.
-    The broken-ANN falsification tests bypass this cache by passing
-    their own (broken) membership to ``_ann_certificate`` directly.
+    The broken-mode falsification tests grade their broken scans
+    against this same canonical relation.
 
     ``planes`` (the hyperplane-LSH families): the membership's
     should_find promise is stated at a specific bit width, so the
@@ -688,7 +701,7 @@ def _membership_cached(
         f.unpersist(blocking=False)
         _release_checkpoint_blocks(f)
 
-    mc = _mc(spark)
+    mc = session_model_cache(spark)
     key = (f"ann_membership_{kind}", sf_dir)
     cached = mc.get(key)
     frames: list = []
@@ -738,13 +751,13 @@ def _membership_cached(
 
 def _exact_topk_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The materialized brute-force exact top-k relation, shared by
-    all three ANN completeness certificates (LSH / IVF / PQ): each
-    certificate needs the SAME exact-kth relation, so it is scored
-    once per session and served from the model cache (k·queries tiny
-    rows persisted; released by ``registry.clear_model_cache``, cold
-    build priced in bench cold_sec, persisted/reloaded by models.py
-    like the other session artifacts)."""
-    mc = _mc(spark)
+    all four query-ANN certificates: each certificate needs the SAME
+    exact relation, so it is scored once per session and served from
+    the model cache (k·queries tiny rows; released by
+    ``registry.clear_model_cache``, cold build priced in bench
+    cold_sec, persisted/reloaded by models.py like the other session
+    artifacts)."""
+    mc = session_model_cache(spark)
     key = ("ann_exact", sf_dir)
     cached = mc.get(key)
     if cached is not None:
@@ -764,128 +777,174 @@ def _exact_topk_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact
 
 
+def _adc_ranks(spark, v, bc, qi, nids, madc):
+    """Per (query index ``qi``, exact member ``nids``, member ADC
+    ``madc``): the member's ADC rank — how many OTHER rows the query
+    routes to its probes (self excluded) precede it under (adc desc,
+    id asc).  One corpus pass; partial counts combine by SUM, so the
+    rank is exact and partition-independent."""
+    import numpy as np
+    import pandas as pd
+
+    bc_thr = spark.sparkContext.broadcast((qi, nids, madc))
+
+    def kernel(batches):
+        st = bc.value
+        tq, tn, tm = bc_thr.value
+        # thresholds grouped by query: each query's ADC is computed
+        # ONCE per batch, then compared against its ≤ k thresholds
+        by_query: dict[int, list] = {}
+        for i, j in enumerate(tq):
+            by_query.setdefault(int(j), []).append(i)
+        for b in batches:
+            if not len(b):
+                continue
+            ids, e, en = _batch_vectors(b)
+            routed = None if st.router is None else st.router.route(e, en)
+            codes = _pq_encode(en, st.books)
+            cnts = np.empty(len(tq), dtype=np.int64)
+            for j, idxs in by_query.items():
+                adc = _pq_adc(codes, st.lut[j])
+                cand = ids != st.ids[j]
+                if routed is not None:
+                    cand &= np.isin(routed, st.probes[j])
+                for i in idxs:
+                    better = (adc > tm[i]) | ((adc == tm[i]) & (ids < tn[i]))
+                    cnts[i] = int((better & cand & (ids != tn[i])).sum())
+            yield pd.DataFrame({"i": np.arange(len(tq)), "cnt": cnts})
+
+    ranks = (
+        v.mapInPandas(kernel, schema="i long, cnt long")
+        .groupBy("i")
+        .agg(F.sum("cnt").alias("rank"))
+        .toPandas()
+    )
+    bc_thr.destroy()
+    out = np.zeros(len(qi), dtype=np.int64)
+    out[ranks["i"].to_numpy()] = ranks["rank"].to_numpy()
+    return out
+
+
+def _ann_membership(
+    spark: SparkSession, sf_dir: str, family: str, exact: DataFrame
+) -> DataFrame:
+    """``(query_id, neighbor_id, cos_sim, should_find)`` per exact
+    top-k member of ``family``'s CANONICAL (never broken) query state:
+    should_find = the member routes to one of the query's probed
+    buckets/cells and, for ADC families, its ADC rank
+    (:func:`_adc_ranks`) is below :data:`PQ_REFINE`.  Member routing
+    and codes are recomputed from the trained models on the ≤ k·queries
+    member rows (broadcast-semi-filtered corpus, driver-collected),
+    independent of the scan under test.  The relation carries the
+    exact member's ``cos_sim``, so the certificate needs no exact join."""
+    import numpy as np
+
+    bc = _query_state(spark, sf_dir, family)
+    st = bc.value
+    v = _embeddings(spark, sf_dir)
+    pairs = exact.toPandas()
+    members = v.join(
+        F.broadcast(exact.select(F.col("neighbor_id").alias("vec_id")).distinct()),
+        "vec_id",
+    ).toPandas()
+    should = np.ones(len(pairs), dtype=bool)
+    if len(members):
+        mids, e, en = _batch_vectors(members)
+        row = {int(i): r for r, i in enumerate(mids)}
+        qrow = {int(q): j for j, q in enumerate(st.ids)}
+        mi = np.array([row[int(n)] for n in pairs["neighbor_id"]], dtype=np.int64)
+        qi = np.array([qrow[int(q)] for q in pairs["query_id"]], dtype=np.int64)
+        if st.router is not None:
+            keys = st.router.route(e, en)
+            should &= np.array(
+                [keys[m] in st.probes[j] for m, j in zip(mi, qi)], dtype=bool
+            )
+        if st.lut is not None:
+            codes = _pq_encode(en, st.books)
+            madc = st.lut[qi, 0, codes[mi, 0]]
+            for m in range(1, PQ_M):
+                madc = madc + st.lut[qi, m, codes[mi, m]]
+            should &= (
+                _adc_ranks(spark, v, bc, qi, pairs["neighbor_id"].to_numpy(), madc)
+                < PQ_REFINE
+            )
+    pairs["should_find"] = should
+    return spark.createDataFrame(
+        pairs[["query_id", "neighbor_id", "cos_sim", "should_find"]],
+        schema="query_id long, neighbor_id long, cos_sim double, should_find boolean",
+    )
+
+
 def _ann_certificate(
-    spark: SparkSession,
-    sf_dir: str,
-    ann: DataFrame,
-    membership,
-    exact: DataFrame | None = None,
-    broadcast_found: bool = True,
+    ann: DataFrame, membership: DataFrame, broadcast_found: bool = True
 ) -> DataFrame:
     """Per-query ANN COMPLETENESS certificate (the in-bound-flag
-    pattern of percentile_digest, adapted to what an LSH/IVF actually
-    promises deterministically):
+    pattern of percentile_digest, adapted to what an ANN index actually
+    promises deterministically), from the ANN output ``ann`` and the
+    canonical ``membership`` relation — (query_id, neighbor_id,
+    cos_sim, should_find) per exact top-k member:
 
     - ``exact_kth_sim`` — the k-th exact cosine per query, computed by
       the engine's OWN brute-force scorer; the oracle recomputes it
       independently in SQL, so a hash match proves the exact side
       end-to-end (queries, scoring, rounding, tie order).
-    - ``ann_complete_ok`` — every exact-top-k member whose
-      bucket/cell the query PROBES (``membership``: per (query_id,
-      neighbor_id) a ``should_find`` bool recomputed from the
-      canonical signature/centroid assignment) must appear in the ANN
-      output.  This is deterministic — no statistical slack: a probed
+    - ``ann_complete_ok`` — every exact-top-k member the query's
+      candidate generation PROMISES (``should_find``, recomputed from
+      the canonical routing / ADC ranking) must appear in the ANN
+      output.  This is deterministic — no statistical slack: a promised
       member outranks every non-member candidate under the shared
       (rounded sim desc, id asc) order, so a working ANN cannot drop
       it.  Statistical recall flags are impossible on this fixture
       (uniform-random vectors: per-query recall legitimately hits 0),
       but completeness-within-probe must hold at every scale, and the
-      broken-ANN test shows the flag actually falsifies (mismatched
-      query planes / farthest-cell probing).
+      broken-ANN tests show the flag actually falsifies.
 
     Queries none of whose exact members are probed are vacuously
     complete — the flag certifies the ANN faithfully returns what its
     candidate generation promises, not that candidate generation has
     high recall on structureless data (the docstrings' analytic
     recall math covers that).
+
+    The membership carries the exact member's cos_sim (fused at build
+    time: :func:`_ann_membership`, :func:`_knn_ann_membership`), so no
+    exact⋈membership join runs per call, and the ANN side is
+    aggregated to ONE found-set row per query BEFORE the join (guide
+    §2.3 — aggregate before you shuffle: the N·k sweep rows cross one
+    exchange as N set rows; the join and the final groupBy then share
+    the hash(query_id) partitioning).  ``min(cos_sim)`` over the
+    member rows is the k-th exact sim, and "member missing from the
+    per-query found set" is "no (query, member) row in the ANN output".
+
+    Query-bounded certificates broadcast the found side explicitly
+    (r17, guide §3.1): their ANN output is ≤ TOP_K × MAX_QUERIES rows
+    by construction, but it hangs below a mapInPandas whose size the
+    planner cannot estimate, so the static plan would pick a
+    SortMergeJoin.  The CORPUS-WIDE certificates (knn_graph_ann,
+    stream_knn_index_live — every vector is a query) pass
+    ``broadcast_found=False``: there the found side carries the whole
+    N·k sweep, and forcing a BroadcastExchange serializes the sweep
+    through a driver collect before the join can start (interleaved
+    A/B: 3.46 vs 2.58 s min-of-6) — they keep the shuffled join and let
+    AQE pick the runtime strategy.
     """
-    # the brute-force exact relation is referenced three times in the
-    # certificate tree (k-th sim, found-check, membership) — and is
-    # IDENTICAL across the three certificates, so it lives in the
-    # session model cache (scored once per session, priced in
-    # cold_sec) rather than being rebuilt per certificate call.
-    if exact is None:
-        exact = _exact_topk_cached(spark, sf_dir)
-    if callable(membership):
-        membership = membership(exact)
-    # Query-bounded certificates broadcast the found side explicitly
-    # (r17, guide §3.1): their ANN output is ≤ TOP_K × MAX_QUERIES
-    # rows by construction, but it hangs below a mapInPandas whose
-    # size the planner cannot estimate, so the static plan picked a
-    # SortMergeJoin — two Exchange+Sort pairs over the certificate's
-    # tiny relations (similarity_ann_lsh_before.txt ops 97/98 +
-    # 124/125); the hint makes it a BroadcastHashJoin (measured
-    # similarity_ann_lsh 1.04→0.59 s).  The CORPUS-WIDE certificates
-    # (knn_graph_ann, stream_knn_index_live — every vector is a query)
-    # pass broadcast_found=False: there the found side carries the
-    # whole N·k sweep, and forcing a BroadcastExchange serializes the
-    # sweep through a driver collect before the join can start
-    # (interleaved A/B: 3.46 vs 2.58 s min-of-6) — they keep the
-    # shuffled join and let AQE pick the runtime strategy.
-    # FUSED membership (r18, corpus-wide families): when the cached
-    # membership relation already carries the exact member's cos_sim
-    # (pre-fused at build time — _knn_ann_membership), the per-call
-    # exact⋈membership SortMergeJoin disappears, and the sweep side is
-    # aggregated to ONE found-set row per query BEFORE the join
-    # (guide §2.3 — aggregate before you shuffle: the N·k sweep rows
-    # cross one exchange as N set rows; the join and the final groupBy
-    # then share the hash(query_id) partitioning, so the certificate
-    # tail is 2 exchanges instead of 4).  Value-identical: the grouped
-    # rows are exactly the same exact-member rows, min(cos_sim) is
-    # unchanged, and "member missing from the per-query found set" is
-    # the same predicate as "no (query,member) row in the sweep output"
-    # (collect_set dedup is irrelevant — min is duplicate-insensitive).
-    if "cos_sim" in membership.columns:
-        found_sets = ann.groupBy("query_id").agg(
-            F.collect_set("neighbor_id").alias("found_ids")
-        )
-        if broadcast_found:
-            found_sets = F.broadcast(found_sets)
-        return (
-            membership.select(
-                "query_id", "neighbor_id", "cos_sim", "should_find"
-            )
-            .join(found_sets, ["query_id"], "left")
-            .groupBy("query_id")
-            .agg(
-                F.round(F.min("cos_sim"), 6).alias("exact_kth_sim"),
-                F.min(
-                    F.when(
-                        F.coalesce(F.col("should_find"), F.lit(False))
-                        & ~F.coalesce(
-                            F.array_contains(
-                                F.col("found_ids"), F.col("neighbor_id")
-                            ),
-                            F.lit(False),
-                        ),
-                        F.lit(False),
-                    ).otherwise(F.lit(True))
-                ).alias("ann_complete_ok"),
-            )
-            .select("query_id", "exact_kth_sim", "ann_complete_ok")
-        )
-    found = ann.select("query_id", "neighbor_id", F.lit(True).alias("found"))
+    found_sets = ann.groupBy("query_id").agg(
+        F.collect_set("neighbor_id").alias("found_ids")
+    )
     if broadcast_found:
-        found = F.broadcast(found)
-    # ONE aggregation carries both certificate columns (r17): the
-    # k-th exact sim is a min over exactly the rows the completeness
-    # check already groups (the exact relation left-joined to
-    # membership and the sweep output), so computing it in the same
-    # groupBy deletes the former eagg-side aggregate plus the final
-    # query_id equi-join — one fewer exchange/broadcast per
-    # certificate query, identical values (min and round commute
-    # with the join removal; both engines round once, after the min).
+        found_sets = F.broadcast(found_sets)
     return (
-        exact.select("query_id", "neighbor_id", "cos_sim")
-        .join(membership, ["query_id", "neighbor_id"], "left")
-        .join(found, ["query_id", "neighbor_id"], "left")
+        membership.select("query_id", "neighbor_id", "cos_sim", "should_find")
+        .join(found_sets, ["query_id"], "left")
         .groupBy("query_id")
         .agg(
             F.round(F.min("cos_sim"), 6).alias("exact_kth_sim"),
             F.min(
                 F.when(
                     F.coalesce(F.col("should_find"), F.lit(False))
-                    & ~F.coalesce(F.col("found"), F.lit(False)),
+                    & ~F.coalesce(
+                        F.array_contains(F.col("found_ids"), F.col("neighbor_id")),
+                        F.lit(False),
+                    ),
                     F.lit(False),
                 ).otherwise(F.lit(True))
             ).alias("ann_complete_ok"),
@@ -894,500 +953,53 @@ def _ann_certificate(
     )
 
 
-def _lsh_membership(
-    spark: SparkSession, sf_dir: str, exact: DataFrame | None = None
+def family_certificate(
+    spark: SparkSession, sf_dir: str, family: str, broken: bool = False
 ) -> DataFrame:
-    """(query_id, neighbor_id, should_find) for the LSH ANN: the
-    neighbor's canonical bucket is in the query's canonical probe set
-    (own signature + 1-bit flips).  Signatures are recomputed only for
-    the exact-top-k member rows (broadcast-semi-filtered corpus), so
-    the membership relation costs O(k·queries), not a corpus pass."""
-    v = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    if exact is None:
-        exact = similarity_topk(spark, sf_dir)
-    exact_ids = exact.select("query_id", "neighbor_id")
-    nb = _ann_signatures(
-        v.join(
-            F.broadcast(
-                exact_ids.select(
-                    F.col("neighbor_id").alias("vec_id")
-                ).distinct()
-            ),
-            "vec_id",
-        ),
-        with_embedding=False,
-    ).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("sig").alias("nbucket")
-    )
-    qb = _ann_signatures(
-        v.filter(F.col("vec_id") % QUERY_STRIDE == 0)
-        .orderBy("vec_id")
-        .limit(MAX_QUERIES),
-        with_embedding=False,
-    ).select(
-        F.col("vec_id").alias("query_id"), F.col("sig").alias("qbucket")
-    )
-    probes = F.array(
-        F.col("qbucket"),
-        *[
-            F.col("qbucket").bitwiseXOR(F.lit(1 << p))
-            for p in range(LSH_PLANES)
-            if LSH_MULTIPROBE >= 1
-        ],
-    )
-    return (
-        exact_ids.join(F.broadcast(nb), "neighbor_id")
-        .join(F.broadcast(qb), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.array_contains(probes, F.col("nbucket")).alias("should_find"),
-        )
-    )
-
-
-@register("similarity_ann_lsh", oracle=_ANN_CERT_SQL)
-def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Completeness certificate for
-    :func:`similarity_ann_lsh_neighbors` (the multi-probe
-    hyperplane-LSH ANN) — see :func:`_ann_certificate` for what each
-    column certifies.  The raw neighbor relation stays available as
-    ``similarity_ann_lsh_neighbors``."""
+    """The completeness certificate of one query-ANN family (see
+    :func:`_ann_certificate` for what each column certifies): the
+    family's neighbor relation graded against its session-cached
+    canonical membership.  ``broken=True`` grades the family's broken
+    mode against the SAME canonical membership, which must falsify."""
     exact = _exact_topk_cached(spark, sf_dir)
     membership = _membership_cached(
-        spark, sf_dir, "lsh", lambda: _lsh_membership(spark, sf_dir, exact)
+        spark, sf_dir, family,
+        lambda: _ann_membership(spark, sf_dir, family, exact),
     )
+    if "cos_sim" not in membership.columns:
+        # a model store saved before memberships carried the exact
+        # member's cos_sim: fuse it in once and re-cache
+        fused = exact.join(membership, ["query_id", "neighbor_id"], "left")
+        mc = session_model_cache(spark)
+        key = (f"ann_membership_{family}", sf_dir)
+        mc.pop(key)[0].unpersist(blocking=False)
+        membership = spark.createDataFrame(fused.toPandas(), schema=fused.schema)
+        mc[key] = (membership,)
     return _ann_certificate(
-        spark,
-        sf_dir,
-        similarity_ann_lsh_neighbors(spark, sf_dir),
-        membership,
-        exact=exact,
+        ann_neighbors(spark, sf_dir, family, broken), membership
     )
 
 
-@register("similarity_ivf", oracle=_ANN_CERT_SQL)
-def similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Completeness certificate for :func:`similarity_ivf_neighbors`
-    (the distributed-Lloyd IVF ANN) — see :func:`_ann_certificate`.
-    The raw neighbor relation stays available as
-    ``similarity_ivf_neighbors``."""
-    exact = _exact_topk_cached(spark, sf_dir)
-    cached = _mc(spark).get(("ann_membership_ivf", sf_dir))
-    if cached is None:
-        ann, membership = similarity_ivf_neighbors(
-            spark, sf_dir, with_membership=True, exact=exact
-        )
-        membership = _membership_cached(
-            spark, sf_dir, "ivf", lambda: membership
-        )
-    else:
-        ann = similarity_ivf_neighbors(spark, sf_dir, exact=exact)
-        membership = cached[0]
-    return _ann_certificate(spark, sf_dir, ann, membership, exact=exact)
+def _register_certificate(name: str, family: str) -> None:
+    def certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return family_certificate(spark, sf_dir, family)
+
+    certificate.__name__ = name
+    certificate.__doc__ = (
+        f"Completeness certificate of the {family!r} query-ANN family "
+        "(see the module table and :func:`family_certificate`)."
+    )
+    register(name, oracle=_ANN_CERT_SQL)(certificate)
 
 
-# ---------------------------------------------------------------------------
-# Product quantization (IVF-PQ's memory story, SURVEY.md §2B extension)
-# ---------------------------------------------------------------------------
-
-PQ_M = 8             # subspaces (dim 64 -> 8 dims each)
-PQ_K = 16            # centroids per subspace -> 1 byte/code, 8 B/vector
-PQ_TRAIN_STRIDE = 2  # deterministic 1-in-N training sample (as IVF)
-PQ_LLOYD_STEPS = 4   # per-subspace k-means rounds
-PQ_REFINE = 32       # ADC candidates kept per query for exact re-scoring
-
-
-def _pq_codebooks(spark: SparkSession, sf_dir: str):
-    """Train per-subspace k-means codebooks over the unit-normalized
-    corpus sample — the same distributed-Lloyd machinery as the IVF
-    coarse quantizer, but ALL {PQ_M} subspaces learn in each single
-    pass (one mapInPandas job per round emits ≤ M·K·partitions short
-    partial rows).  Returns (M, K, dim/M) float64, session-cached per
-    ``sf_dir`` (a PQ index is trained once and queried many times —
-    FAISS lifecycle, same argument as the IVF cache).
-
-    Seeding/determinism: round 0 assigns cell = vec_id % K in every
-    subspace; argmin ties take the lowest cell; empty cells keep their
-    previous centroid.  Codebooks are deterministic for a fixed scan
-    partitioning; everything DOWNSTREAM (codes, ADC ranks, the
-    certificate) is derived from this one cached array, so the emitted
-    relation is self-consistent in any environment.
-    """
-    import numpy as np
-    import pandas as pd
-
-    from s3_manifest_spark.registry import track_persist
-
-    model_cache = session_model_cache(spark)
-    cached = model_cache.get(("pq", sf_dir))
-    if cached is not None:
-        return cached
-
-    v = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    tr = track_persist(v.filter(F.col("vec_id") % PQ_TRAIN_STRIDE == 0))
-    books: np.ndarray | None = None  # (M, K, dsub); None -> seed round
-
-    def partials(cur):
-        def gen(batches):
-            for b in batches:
-                ids = b["vec_id"].to_numpy(dtype="int64")
-                e = np.stack(b["embedding"].to_numpy()).astype("float64")
-                en = e / np.linalg.norm(e, axis=1, keepdims=True)
-                dim = en.shape[1]
-                if dim % PQ_M:
-                    raise ValueError(
-                        f"embedding dim {dim} not divisible by PQ_M={PQ_M}"
-                    )
-                dsub = dim // PQ_M
-                out_m, out_c, out_n, out_s = [], [], [], []
-                for m in range(PQ_M):
-                    xm = en[:, m * dsub : (m + 1) * dsub]
-                    if cur is None:
-                        cells = (ids % PQ_K).astype("int64")
-                    else:
-                        cm = cur[m]  # (K, dsub)
-                        # argmin ||x-c||^2 = argmin(-2 x·c + ||c||^2);
-                        # ties -> lowest cell (np.argmin)
-                        d = -2.0 * (xm @ cm.T) + (cm * cm).sum(axis=1)
-                        cells = np.argmin(d, axis=1)
-                    counts = np.bincount(cells, minlength=PQ_K)
-                    sums = np.zeros((PQ_K, dsub))
-                    np.add.at(sums, cells, xm)
-                    uniq = np.nonzero(counts)[0]
-                    out_m.append(np.full(len(uniq), m))
-                    out_c.append(uniq)
-                    out_n.append(counts[uniq])
-                    out_s.extend(sums[c].tolist() for c in uniq)
-                yield pd.DataFrame(
-                    {
-                        "m": np.concatenate(out_m).astype("int32"),
-                        "cell": np.concatenate(out_c).astype("int32"),
-                        "n": np.concatenate(out_n).astype("int64"),
-                        "s": out_s,
-                    }
-                )
-
-        return gen
-
-    for _ in range(PQ_LLOYD_STEPS):
-        rows = tr.mapInPandas(
-            partials(books), schema="m int, cell int, n long, s array<double>"
-        ).collect()  # <= M * K * partitions short rows
-        dsub = len(rows[0]["s"])
-        sums = np.zeros((PQ_M, PQ_K, dsub))
-        counts = np.zeros((PQ_M, PQ_K))
-        for r in rows:
-            sums[r["m"], r["cell"]] += np.asarray(r["s"])
-            counts[r["m"], r["cell"]] += r["n"]
-        new_books = (
-            np.zeros((PQ_M, PQ_K, dsub)) if books is None else books.copy()
-        )
-        nz = counts > 0
-        new_books[nz] = sums[nz] / counts[nz][:, None]
-        books = new_books
-    model_cache[("pq", sf_dir)] = books
-    return books
-
-
-def _pq_encode(en, books):
-    """codes[i, m] = nearest codebook cell of row i's m-th subvector
-    (ties -> lowest cell).  ``en`` must already be unit-normalized."""
-    import numpy as np
-
-    dsub = books.shape[2]
-    codes = np.empty((en.shape[0], PQ_M), dtype=np.int64)
-    for m in range(PQ_M):
-        xm = en[:, m * dsub : (m + 1) * dsub]
-        cm = books[m]
-        d = -2.0 * (xm @ cm.T) + (cm * cm).sum(axis=1)
-        codes[:, m] = np.argmin(d, axis=1)
-    return codes
-
-
-def _pq_adc(codes, lut_q):
-    """ADC score of every coded row against ONE query's LUT
-    ((M, K) table): Σ_m lut[m, code_m], summed in fixed subspace order
-    so the float result is independent of batching/partitioning."""
-    s = lut_q[0, codes[:, 0]]
-    for m in range(1, PQ_M):
-        s = s + lut_q[m, codes[:, m]]
-    return s
-
-
-def similarity_pq_neighbors(
-    spark: SparkSession,
-    sf_dir: str,
-    with_membership: bool = False,
-    exact: DataFrame | None = None,
-    corrupt_lut: bool = False,
+for _name, _family in (
+    ("similarity_ann_lsh", "lsh"),
+    ("similarity_ivf", "ivf"),
+    ("similarity_pq", "pq"),
+    ("similarity_ivf_pq", "ivf_pq"),
 ):
-    """ANN top-k via product quantization + asymmetric distance.
+    _register_certificate(_name, _family)
 
-    1. TRAIN: per-subspace codebooks (:func:`_pq_codebooks`) — the
-       index stores {PQ_M} single-byte codes per vector instead of the
-       full float vector (8 B vs 512 B at dim 64: the memory story
-       IVF-Flat lacks at 100 TB).
-    2. SCAN (one distributed pass): queries' ADC lookup tables
-       (Q × M × K doubles) are broadcast; each Arrow batch encodes its
-       rows once, scores all queries by table lookups (no float
-       vector math per candidate), and keeps its local top-{PQ_REFINE}
-       per query under (adc desc, id asc) — sound for the global
-       top-{PQ_REFINE} because the order is total.
-    3. REFINE: the ≤ {PQ_REFINE}·Q global candidates (window merge)
-       are re-scored EXACTLY against the broadcast query matrix
-       (corpus joined to the broadcast candidate list — candidate-
-       bounded, never a corpus shuffle) and the final top-{TOP_K} per
-       query is emitted with exact rounded cosine.
-
-    ``corrupt_lut=True`` is the deliberate BROKEN mode for the
-    certificate test: negated lookup tables rank the WORST candidates
-    first, so probed exact members drop out and ann_complete_ok must
-    falsify.  ``with_membership`` returns the canonical (query,
-    member) → should_find relation: member's ADC rank < {PQ_REFINE}
-    under the UNCORRUPTED tables — computed by one candidate-bounded
-    member pass plus one corpus count pass (predecessor counting under
-    the same total order the scan uses).
-    """
-    import numpy as np
-    import pandas as pd
-
-    v = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    books = _pq_codebooks(spark, sf_dir)
-    qpdf = _query_pdf_cached(spark, sf_dir, v)
-    qids = qpdf["vec_id"].to_numpy(dtype="int64")
-    qm = np.stack(qpdf["embedding"].to_numpy()).astype("float64")
-    qm /= np.linalg.norm(qm, axis=1, keepdims=True)
-    dsub = books.shape[2]
-    # ADC lookup tables: lut[q, m, c] = q_m · books[m, c]
-    lut = np.stack(
-        [qm[:, m * dsub : (m + 1) * dsub] @ books[m].T for m in range(PQ_M)],
-        axis=1,
-    )  # (Q, M, K)
-    scan_lut = -lut if corrupt_lut else lut
-    bc = spark.sparkContext.broadcast((qids, qm, books, scan_lut))
-    r_keep = PQ_REFINE
-
-    def scan(batches):
-        ids_q, _, bks, tables = bc.value
-        for b in batches:
-            nids = b["vec_id"].to_numpy(dtype="int64")
-            e = np.stack(b["embedding"].to_numpy()).astype("float64")
-            en = e / np.linalg.norm(e, axis=1, keepdims=True)
-            codes = _pq_encode(en, bks)
-            out_q, out_n, out_s = [], [], []
-            for j, qid in enumerate(ids_q):
-                adc = _pq_adc(codes, tables[j])
-                keep = nids != qid
-                cand_ids, cand_adc = nids[keep], adc[keep]
-                order = np.lexsort((cand_ids, -cand_adc))[:r_keep]
-                out_q.append(np.full(len(order), qid))
-                out_n.append(cand_ids[order])
-                out_s.append(cand_adc[order])
-            if not out_q:
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "adc": np.concatenate(out_s),
-                }
-            )
-
-    cands = v.mapInPandas(
-        scan, schema="query_id long, neighbor_id long, adc double"
-    )
-    from pyspark.sql import Window
-
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("adc").desc(), F.col("neighbor_id")
-    )
-    global_cands = (
-        cands.select("*", F.row_number().over(w_adc).alias("rn"))
-        .filter(F.col("rn") <= r_keep)
-        .select("query_id", "neighbor_id")
-    )
-    # exact refine: corpus rows joined to the BROADCAST candidate list
-    refine_src = v.withColumnRenamed("vec_id", "neighbor_id").join(
-        F.broadcast(global_cands), "neighbor_id"
-    )
-
-    def refine(batches):
-        ids_q, queries, _, _ = bc.value
-        qrow = {int(q): i for i, q in enumerate(ids_q)}
-        for b in batches:
-            if not len(b):
-                continue
-            e = np.stack(b["embedding"].to_numpy()).astype("float64")
-            en = e / np.linalg.norm(e, axis=1, keepdims=True)
-            qi = np.array(
-                [qrow[int(q)] for q in b["query_id"].to_numpy()], dtype=np.int64
-            )
-            sims = np.round(np.einsum("ij,ij->i", queries[qi], en), 6)
-            yield pd.DataFrame(
-                {
-                    "query_id": b["query_id"].to_numpy().astype("int64"),
-                    "neighbor_id": b["neighbor_id"].to_numpy().astype("int64"),
-                    "cos_sim": sims,
-                }
-            )
-
-    refined = refine_src.mapInPandas(
-        refine, schema="query_id long, neighbor_id long, cos_sim double"
-    )
-    w_cos = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    topk = (
-        refined.select("*", F.row_number().over(w_cos).alias("rn"))
-        .filter(F.col("rn") <= TOP_K)
-        .drop("rn")
-    )
-    if not with_membership:
-        return topk
-
-    def membership(exact_df):
-        return _pq_membership(spark, sf_dir, bc, exact_df)
-
-    return topk, membership
-
-
-def _pq_membership(spark, sf_dir, bc, exact):
-    """(query_id, neighbor_id, should_find) for the PQ ANN: the exact
-    member's canonical ADC rank (predecessors under (adc desc, id
-    asc), self-query excluded) is below PQ_REFINE.  Two bounded
-    passes: member ADC thresholds from the candidate-filtered corpus
-    (O(k·queries) rows), then one corpus pass counting predecessors
-    per (query, member) — partial counts combine by SUM, so the rank
-    is exact and partition-independent."""
-    import numpy as np
-    import pandas as pd
-
-    v = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    exact_ids = exact.select("query_id", "neighbor_id")
-    memb_src = v.join(
-        F.broadcast(
-            exact_ids.select(F.col("neighbor_id").alias("vec_id")).distinct()
-        ),
-        "vec_id",
-    )
-
-    def member_adc(batches):
-        ids_q, _, bks, _ = bc.value
-        # canonical (UNcorrupted) tables, rebuilt from the codebooks
-        for b in batches:
-            nids = b["vec_id"].to_numpy(dtype="int64")
-            e = np.stack(b["embedding"].to_numpy()).astype("float64")
-            en = e / np.linalg.norm(e, axis=1, keepdims=True)
-            codes = _pq_encode(en, bks)
-            _, queries, _, _ = bc.value
-            dsub = bks.shape[2]
-            out = []
-            for j, qid in enumerate(ids_q):
-                lut_q = np.stack(
-                    [
-                        queries[j, m * dsub : (m + 1) * dsub] @ bks[m].T
-                        for m in range(PQ_M)
-                    ]
-                )
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.full(len(nids), qid),
-                            "neighbor_id": nids,
-                            "madc": _pq_adc(codes, lut_q),
-                        }
-                    )
-                )
-            yield pd.concat(out, ignore_index=True)
-
-    madc = (
-        memb_src.mapInPandas(
-            member_adc, schema="query_id long, neighbor_id long, madc double"
-        )
-        # keep only the (query, member) pairs the certificate checks
-        .join(F.broadcast(exact_ids), ["query_id", "neighbor_id"])
-    )
-    thresholds = madc.toPandas()  # <= k·queries rows, bounded
-    bc_thr = spark.sparkContext.broadcast(
-        (
-            thresholds["query_id"].to_numpy("int64"),
-            thresholds["neighbor_id"].to_numpy("int64"),
-            thresholds["madc"].to_numpy("float64"),
-        )
-    )
-
-    def count_predecessors(batches):
-        ids_q, queries, bks, _ = bc.value
-        tq, tn, tm = bc_thr.value
-        dsub = bks.shape[2]
-        qrow = {int(q): j for j, q in enumerate(ids_q)}
-        tj = np.array([qrow[int(q)] for q in tq], dtype=np.int64)
-        # thresholds grouped by query: each query's ADC is computed
-        # ONCE per batch, then compared against its ≤ k thresholds
-        by_query: dict[int, np.ndarray] = {}
-        for i, j in enumerate(tj):
-            by_query.setdefault(int(j), []).append(i)
-        for b in batches:
-            nids = b["vec_id"].to_numpy(dtype="int64")
-            e = np.stack(b["embedding"].to_numpy()).astype("float64")
-            en = e / np.linalg.norm(e, axis=1, keepdims=True)
-            codes = _pq_encode(en, bks)
-            cnts = np.empty(len(tq), dtype=np.int64)
-            for j, idxs in by_query.items():
-                lut_q = np.stack(
-                    [
-                        queries[j, m * dsub : (m + 1) * dsub] @ bks[m].T
-                        for m in range(PQ_M)
-                    ]
-                )
-                adc = _pq_adc(codes, lut_q)
-                not_self = nids != ids_q[j]
-                for i in idxs:
-                    better = (adc > tm[i]) | ((adc == tm[i]) & (nids < tn[i]))
-                    better &= not_self & (nids != tn[i])
-                    cnts[i] = int(better.sum())
-            yield pd.DataFrame(
-                {"query_id": tq, "neighbor_id": tn, "cnt": cnts}
-            )
-
-    counts = (
-        v.mapInPandas(
-            count_predecessors,
-            schema="query_id long, neighbor_id long, cnt long",
-        )
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("cnt").alias("rank"))
-    )
-    return counts.select(
-        "query_id",
-        "neighbor_id",
-        (F.col("rank") < PQ_REFINE).alias("should_find"),
-    )
-
-
-@register("similarity_pq", oracle=_ANN_CERT_SQL)
-def similarity_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Completeness certificate for :func:`similarity_pq_neighbors`
-    (product-quantization ADC scan + exact refine) — see
-    :func:`_ann_certificate` for what each column certifies.  The raw
-    neighbor relation stays available as ``similarity_pq_neighbors``.
-    """
-    exact = _exact_topk_cached(spark, sf_dir)
-    cached = _mc(spark).get(("ann_membership_pq", sf_dir))
-    if cached is None:
-        ann, mem_raw = similarity_pq_neighbors(
-            spark, sf_dir, with_membership=True, exact=exact
-        )
-        # PQ hands membership back as a lazy builder over the exact
-        # relation — resolve it once here and session-cache the result
-        membership = _membership_cached(
-            spark, sf_dir, "pq", lambda: mem_raw(exact)
-        )
-    else:
-        ann = similarity_pq_neighbors(spark, sf_dir, exact=exact)
-        membership = cached[0]
-    return _ann_certificate(spark, sf_dir, ann, membership, exact=exact)
 
 
 # ---------------------------------------------------------------------------
@@ -2013,7 +1625,7 @@ def _knn_ann_index_cached(
     :func:`_knn_ann_planes` boundary must be probed with ITS OWN bit
     width, not one re-derived from the current file — a mismatched
     flip set silently degrades candidate completeness."""
-    mc = _mc(spark)
+    mc = session_model_cache(spark)
     key = ("knn_ann_index", sf_dir)
     cached = mc.get(key)
     # legacy guard: a store persisted before the plane count traveled
@@ -2087,7 +1699,7 @@ def _knn_query_pack_cached(
     set is the production radius (:data:`KNN_ANN_MULTIPROBE`);
     :func:`knn_graph_ann_neighbors` rejects a pre-exploded pack at
     any other radius."""
-    mc = _mc(spark)
+    mc = session_model_cache(spark)
     key = ("knn_query_pack", sf_dir)
     cached = mc.get(key)
     # The pack's bit width must equal the SERVED index's — a pack
@@ -2162,7 +1774,7 @@ def _knn_query_probes_cached(
     destroyed by ``registry.clear_model_cache``)."""
     import numpy as np
 
-    mc = _mc(spark)
+    mc = session_model_cache(spark)
     key = ("knn_query_probes", sf_dir)
     cached = mc.get(key)
     if cached is not None and int(cached[1]) == int(p):
@@ -2437,7 +2049,7 @@ def _knn_exact_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     A/B read local ≈0.15-0.2 s SLOWER than the distributed checkpoint
     (min-of-8: 1.53 vs 1.34 s).  Driver-localization is for BUILD
     (broadcast) sides and tiny streamed relations only."""
-    mc = _mc(spark)
+    mc = session_model_cache(spark)
     key = ("knn_exact", sf_dir)
     cached = mc.get(key)
     if cached is not None:
@@ -2566,13 +2178,10 @@ def knn_graph_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         localize=False,
     )
     cert = _ann_certificate(
-        spark,
-        sf_dir,
         knn_graph_ann_neighbors(
             spark, sf_dir, index=idx
         ).withColumnRenamed("vec_id", "query_id"),
         membership.withColumnRenamed("vec_id", "query_id"),
-        exact=exact.withColumnRenamed("vec_id", "query_id"),
         # corpus-wide: the found side IS the N·k sweep — see the
         # broadcast_found note in _ann_certificate
         broadcast_found=False,
@@ -2607,7 +2216,7 @@ def _knn_exact_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    mc = _mc(spark)
+    mc = session_model_cache(spark)
     key = ("knn_exact_sampled", sf_dir)
     cached = mc.get(key)
     if cached is not None:
@@ -2721,8 +2330,6 @@ def knn_graph_ann_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         planes=idx[1],
     )
     cert = _ann_certificate(
-        spark,
-        sf_dir,
         # query-side-restricted sweep (r15): probe the served index
         # with ONLY the sampled vectors — per sampled query the
         # candidate set is identical to the full sweep's, so this is
@@ -2739,7 +2346,6 @@ def knn_graph_ann_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).withColumnRenamed("vec_id", "query_id"),
         membership.withColumnRenamed("vec_id", "query_id"),
-        exact=exact.withColumnRenamed("vec_id", "query_id"),
     )
     return cert.withColumnRenamed("query_id", "vec_id")
 
@@ -2909,7 +2515,7 @@ def knn_ann_expected_capture(
         planes = _knn_ann_planes(
             parquet_row_count(f"{sf_dir}/embeddings.parquet")
         )
-    mc = _mc(spark)
+    mc = session_model_cache(spark)
     key = ("knn_ann_capture", sf_dir, int(planes), int(radius))
     cached = mc.get(key)
     if cached is not None:
@@ -3108,285 +2714,3 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.lit(0.0)
         ).alias("cov"),
     )
-
-
-def similarity_ivf_pq_neighbors(
-    spark: SparkSession,
-    sf_dir: str,
-    with_membership: bool = False,
-    corrupt_lut: bool = False,
-):
-    """IVF-PQ approximate top-k — the production FAISS composition of
-    the two indexes this module already trains: the IVF coarse
-    quantizer (:func:`_ivf_centroids`, shared session model) routes
-    each query to its :data:`IVF_NPROBE` nearest cells, PQ codes
-    (:func:`_pq_codebooks`, shared session model) ADC-score ONLY the
-    rows living in probed cells, the global top-:data:`PQ_REFINE` ADC
-    candidates per query re-score exactly, and the final
-    top-:data:`TOP_K` emits exact rounded cosine.
-
-    Why this is THE 100 TB shape: IVF-Flat still touches full float
-    vectors for every probed row (512 B/vector at dim 64); PQ-Flat
-    scans every row's codes.  Composed, the scan touches 8 B codes
-    for ~nprobe/K of the corpus — both the memory story and the
-    selectivity story at once, exactly like a FAISS ``IVFx,PQy``
-    index.  One distributed pass, corpus never shuffled, the only
-    driver rows are the Lloyd/codebook partials and the bounded query
-    set.
-
-    ``corrupt_lut=True`` is the deliberate BROKEN mode for the
-    certificate falsification test (negated ADC tables, as
-    similarity_pq).  ``with_membership`` returns the canonical
-    (query, exact-member) → should_find relation: member's cell is
-    probed AND its ADC rank among probed-cell candidates is below
-    {PQ_REFINE} under uncorrupted tables — both conditions
-    deterministic, so the completeness flag falsifies mechanically.
-    """
-    import numpy as np
-    import pandas as pd
-
-    v = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cent = _ivf_centroids(spark, sf_dir)
-    centn = cent / np.maximum(np.linalg.norm(cent, axis=1, keepdims=True), 1e-12)
-    books = _pq_codebooks(spark, sf_dir)
-    qpdf = _query_pdf_cached(spark, sf_dir, v)
-    qids = qpdf["vec_id"].to_numpy(dtype="int64")
-    qm = np.stack(qpdf["embedding"].to_numpy()).astype("float64")
-    qm /= np.linalg.norm(qm, axis=1, keepdims=True)
-    probes = np.argsort(-(qm @ centn.T), kind="stable", axis=1)[:, :IVF_NPROBE]
-    dsub = books.shape[2]
-    lut = np.stack(
-        [qm[:, m * dsub : (m + 1) * dsub] @ books[m].T for m in range(PQ_M)],
-        axis=1,
-    )  # (Q, M, K)
-    scan_lut = -lut if corrupt_lut else lut
-    bc = spark.sparkContext.broadcast((qids, qm, books, scan_lut, probes, centn))
-    r_keep = PQ_REFINE
-
-    def scan(batches):
-        ids_q, _, bks, tables, probe_cells, cents = bc.value
-        for b in batches:
-            nids = b["vec_id"].to_numpy(dtype="int64")
-            e = np.stack(b["embedding"].to_numpy()).astype("float64")
-            en = e / np.linalg.norm(e, axis=1, keepdims=True)
-            cells = np.argmax(en @ cents.T, axis=1)
-            codes = _pq_encode(en, bks)
-            out_q, out_n, out_s = [], [], []
-            for j, qid in enumerate(ids_q):
-                keep = np.isin(cells, probe_cells[j]) & (nids != qid)
-                if not keep.any():
-                    continue
-                adc = _pq_adc(codes[keep], tables[j])
-                cand_ids = nids[keep]
-                order = np.lexsort((cand_ids, -adc))[:r_keep]
-                out_q.append(np.full(len(order), qid))
-                out_n.append(cand_ids[order])
-                out_s.append(adc[order])
-            if not out_q:
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "adc": np.concatenate(out_s),
-                }
-            )
-
-    cands = v.mapInPandas(
-        scan, schema="query_id long, neighbor_id long, adc double"
-    )
-    from pyspark.sql import Window
-
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("adc").desc(), F.col("neighbor_id")
-    )
-    global_cands = (
-        cands.select("*", F.row_number().over(w_adc).alias("rn"))
-        .filter(F.col("rn") <= r_keep)
-        .select("query_id", "neighbor_id")
-    )
-    refine_src = v.withColumnRenamed("vec_id", "neighbor_id").join(
-        F.broadcast(global_cands), "neighbor_id"
-    )
-
-    def refine(batches):
-        ids_q, queries, _, _, _, _ = bc.value
-        qrow = {int(q): i for i, q in enumerate(ids_q)}
-        for b in batches:
-            if not len(b):
-                continue
-            e = np.stack(b["embedding"].to_numpy()).astype("float64")
-            en = e / np.linalg.norm(e, axis=1, keepdims=True)
-            qi = np.array(
-                [qrow[int(q)] for q in b["query_id"].to_numpy()], dtype=np.int64
-            )
-            sims = np.round(np.einsum("ij,ij->i", queries[qi], en), 6)
-            yield pd.DataFrame(
-                {
-                    "query_id": b["query_id"].to_numpy().astype("int64"),
-                    "neighbor_id": b["neighbor_id"].to_numpy().astype("int64"),
-                    "cos_sim": sims,
-                }
-            )
-
-    refined = refine_src.mapInPandas(
-        refine, schema="query_id long, neighbor_id long, cos_sim double"
-    )
-    w_cos = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    topk = (
-        refined.select("*", F.row_number().over(w_cos).alias("rn"))
-        .filter(F.col("rn") <= TOP_K)
-        .drop("rn")
-    )
-    if not with_membership:
-        return topk
-
-    def membership(exact_df):
-        return _ivf_pq_membership(spark, sf_dir, bc, exact_df)
-
-    return topk, membership
-
-
-def _ivf_pq_membership(spark, sf_dir, bc, exact):
-    """(query_id, neighbor_id, should_find) for the IVF-PQ ANN:
-    the exact member's centroid cell is among the query's canonical
-    nearest :data:`IVF_NPROBE` cells AND its canonical ADC rank among
-    probed-cell candidates (predecessors under (adc desc, id asc),
-    self-query excluded) is below :data:`PQ_REFINE`.  Same two
-    bounded passes as :func:`_pq_membership`, with the cell filter
-    applied to both the member and its predecessor candidates —
-    canonical (UNcorrupted) tables throughout, so the broken-mode
-    certificate falsifies against this relation."""
-    import numpy as np
-    import pandas as pd
-
-    v = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    exact_ids = exact.select("query_id", "neighbor_id")
-    memb_src = v.join(
-        F.broadcast(
-            exact_ids.select(F.col("neighbor_id").alias("vec_id")).distinct()
-        ),
-        "vec_id",
-    )
-
-    def member_adc(batches):
-        ids_q, queries, bks, _, probe_cells, cents = bc.value
-        dsub = bks.shape[2]
-        for b in batches:
-            nids = b["vec_id"].to_numpy(dtype="int64")
-            e = np.stack(b["embedding"].to_numpy()).astype("float64")
-            en = e / np.linalg.norm(e, axis=1, keepdims=True)
-            cells = np.argmax(en @ cents.T, axis=1)
-            codes = _pq_encode(en, bks)
-            out = []
-            for j, qid in enumerate(ids_q):
-                lut_q = np.stack(
-                    [
-                        queries[j, m * dsub : (m + 1) * dsub] @ bks[m].T
-                        for m in range(PQ_M)
-                    ]
-                )
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.full(len(nids), qid),
-                            "neighbor_id": nids,
-                            "madc": _pq_adc(codes, lut_q),
-                            "probed": np.isin(cells, probe_cells[j]),
-                        }
-                    )
-                )
-            yield pd.concat(out, ignore_index=True)
-
-    madc = (
-        memb_src.mapInPandas(
-            member_adc,
-            schema="query_id long, neighbor_id long, madc double, probed boolean",
-        )
-        .join(F.broadcast(exact_ids), ["query_id", "neighbor_id"])
-    )
-    thresholds = madc.toPandas()  # <= k·queries rows, bounded
-    bc_thr = spark.sparkContext.broadcast(
-        (
-            thresholds["query_id"].to_numpy("int64"),
-            thresholds["neighbor_id"].to_numpy("int64"),
-            thresholds["madc"].to_numpy("float64"),
-        )
-    )
-
-    def count_predecessors(batches):
-        ids_q, queries, bks, _, probe_cells, cents = bc.value
-        tq, tn, tm = bc_thr.value
-        dsub = bks.shape[2]
-        qrow = {int(q): j for j, q in enumerate(ids_q)}
-        tj = np.array([qrow[int(q)] for q in tq], dtype=np.int64)
-        by_query: dict[int, list] = {}
-        for i, j in enumerate(tj):
-            by_query.setdefault(int(j), []).append(i)
-        for b in batches:
-            nids = b["vec_id"].to_numpy(dtype="int64")
-            e = np.stack(b["embedding"].to_numpy()).astype("float64")
-            en = e / np.linalg.norm(e, axis=1, keepdims=True)
-            cells = np.argmax(en @ cents.T, axis=1)
-            codes = _pq_encode(en, bks)
-            cnts = np.empty(len(tq), dtype=np.int64)
-            for j, idxs in by_query.items():
-                lut_q = np.stack(
-                    [
-                        queries[j, m * dsub : (m + 1) * dsub] @ bks[m].T
-                        for m in range(PQ_M)
-                    ]
-                )
-                adc = _pq_adc(codes, lut_q)
-                in_probe = np.isin(cells, probe_cells[j]) & (nids != ids_q[j])
-                for i in idxs:
-                    better = (adc > tm[i]) | ((adc == tm[i]) & (nids < tn[i]))
-                    better &= in_probe & (nids != tn[i])
-                    cnts[i] = int(better.sum())
-            yield pd.DataFrame(
-                {"query_id": tq, "neighbor_id": tn, "cnt": cnts}
-            )
-
-    counts = (
-        v.mapInPandas(
-            count_predecessors,
-            schema="query_id long, neighbor_id long, cnt long",
-        )
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("cnt").alias("rank"))
-    )
-    # explicit schema (ADVICE r13): inference raises on an empty pandas
-    # frame, and an empty exact/membership relation is a legal input.
-    probed_flag = spark.createDataFrame(
-        thresholds[["query_id", "neighbor_id", "probed"]],
-        schema="query_id long, neighbor_id long, probed boolean",
-    )
-    return counts.join(probed_flag, ["query_id", "neighbor_id"]).select(
-        "query_id",
-        "neighbor_id",
-        (F.col("probed") & (F.col("rank") < PQ_REFINE)).alias("should_find"),
-    )
-
-
-@register("similarity_ivf_pq", oracle=_ANN_CERT_SQL)
-def similarity_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Completeness certificate for
-    :func:`similarity_ivf_pq_neighbors` (the composed FAISS-style
-    IVF-PQ index: coarse-cell routing + in-cell ADC scan + exact
-    refine) — see :func:`_ann_certificate`.  The raw neighbor
-    relation stays available as ``similarity_ivf_pq_neighbors``."""
-    exact = _exact_topk_cached(spark, sf_dir)
-    cached = _mc(spark).get(("ann_membership_ivf_pq", sf_dir))
-    if cached is None:
-        ann, membership = similarity_ivf_pq_neighbors(
-            spark, sf_dir, with_membership=True
-        )
-        membership = _membership_cached(
-            spark, sf_dir, "ivf_pq", lambda: membership(exact)
-        )
-    else:
-        ann = similarity_ivf_pq_neighbors(spark, sf_dir)
-        membership = cached[0]
-    return _ann_certificate(spark, sf_dir, ann, membership, exact=exact)

@@ -382,13 +382,10 @@ def stream_knn_index_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         localize=False,
     )
     cert = _ann_certificate(
-        spark,
-        sf_dir,
         knn_graph_ann_neighbors(
             spark, sf_dir, index=(packed, p)
         ).withColumnRenamed("vec_id", "query_id"),
         membership.withColumnRenamed("vec_id", "query_id"),
-        exact=exact.withColumnRenamed("vec_id", "query_id"),
         # corpus-wide certificate, same as knn_graph_ann: never force
         # the N·k sweep through a BroadcastExchange driver collect
         broadcast_found=False,

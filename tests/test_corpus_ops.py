@@ -279,13 +279,10 @@ def test_knn_graph_ann_certificate_falsifies(spark):
     exact = _knn_exact_cached(spark, SF)
     membership = _knn_ann_membership(spark, SF, exact)
     broken = _ann_certificate(
-        spark,
-        SF,
         knn_graph_ann_neighbors(spark, SF, probe_radius=0).withColumnRenamed(
             "vec_id", "query_id"
         ),
         membership.withColumnRenamed("vec_id", "query_id"),
-        exact=exact.withColumnRenamed("vec_id", "query_id"),
     ).toPandas()
     assert not broken["ann_complete_ok"].all()
 

@@ -1,5 +1,5 @@
 """Semantic unit tests for the advanced join + vector operators:
-as-of tie-breaks, band boundary inclusivity, IVF/near-dup invariants.
+as-of tie-breaks, band boundary inclusivity, near-dup invariants.
 These encode the operator contracts directly, independent of the
 DuckDB parity harness.
 """
@@ -16,10 +16,6 @@ from s3_manifest_spark.operators.joins_advanced import (
     BAND_WIDTH,
     asof_join,
     range_join_bands,
-)
-from s3_manifest_spark.operators.similarity import (
-    TOP_K,
-    similarity_ivf_neighbors,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -74,38 +70,3 @@ def test_dedup_embedding_pairs_ordered_and_above_threshold(spark):
     for r in rows:
         assert r.vec_a < r.vec_b
         assert r.cos_sim >= EMBED_DUP_THRESHOLD
-
-
-def test_similarity_ivf_topk_shape(spark):
-    rows = similarity_ivf_neighbors(spark, SF).collect()
-    per_query: dict[int, list] = {}
-    for r in rows:
-        per_query.setdefault(r.query_id, []).append(r)
-    assert per_query, "no IVF results"
-    for qid, rs in per_query.items():
-        assert len(rs) <= TOP_K
-        assert all(x.neighbor_id != qid for x in rs)
-        sims = [x.cos_sim for x in rs]
-        assert sims == sorted(sims, reverse=True)
-
-
-def test_similarity_ivf_recall_vs_brute_force(spark):
-    """IVF with K=8/nprobe=2 over near-orthogonal synthetic vectors
-    must still recover a solid fraction of the true top-k (measured
-    0.68 @ sf0.001, 0.80 @ sf0.01; assert a conservative floor —
-    deterministic quantizer, so this is stable, not flaky)."""
-    import __spark_entry__ as entrymod
-
-    q = entrymod.queries()
-    bf = q["similarity_topk"](spark, SF).toPandas()
-    from s3_manifest_spark.operators.similarity import (
-        similarity_ivf_neighbors as _ivfn,
-    )
-
-    ivf = _ivfn(spark, SF).toPandas()
-    b = set(zip(bf.query_id, bf.neighbor_id))
-    i = set(zip(ivf.query_id, ivf.neighbor_id))
-    assert len(b & i) / len(b) >= 0.6
-    # every IVF hit carries the EXACT cosine (scored, not estimated)
-    merged = ivf.merge(bf, on=["query_id", "neighbor_id"], suffixes=("_i", "_b"))
-    assert (merged.cos_sim_i == merged.cos_sim_b).all()

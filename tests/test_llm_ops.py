@@ -184,52 +184,6 @@ def test_corpus09_oracle_is_not_vacuous(spark):
     assert len(planted) >= 1 and any(r[2] >= 0.9 for r in planted)
 
 
-def test_similarity_topk_matches_numpy(spark, q):
-    """Brute-force top-k must equal an independent numpy ground truth
-    (exact cosine, same rounding + tie-break)."""
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(f"{SF}/embeddings.parquet")
-    ids = t["vec_id"].to_numpy()
-    emb = np.array(t["embedding"].to_pylist(), dtype=np.float64)
-    norms = np.linalg.norm(emb, axis=1)
-    pdf = q["similarity_topk"](spark, SF).toPandas()
-    assert set(pdf.groupby("query_id").size()) == {5}
-    for qid in ids[ids % 100 == 0]:
-        qv = emb[ids == qid][0]
-        cos = emb @ qv / (norms * np.linalg.norm(qv))
-        order = sorted(
-            [(round(c, 6), i) for c, i in zip(cos, ids) if i != qid],
-            key=lambda t: (-t[0], t[1]),
-        )
-        expect = [(i, c) for c, i in order[:5]]
-        got = pdf[pdf.query_id == qid].sort_values(
-            ["cos_sim", "neighbor_id"], ascending=[False, True]
-        )
-        assert list(got.neighbor_id) == [i for i, _ in expect], f"query {qid}"
-        assert np.allclose(list(got.cos_sim), [c for _, c in expect], atol=1e-6)
-
-
-def test_ann_lsh_candidates_are_correct(spark, q):
-    """ANN reports a subset of the true pair space with correct cosine
-    values (the fixture's vectors are near-orthogonal, so recall vs
-    brute force isn't meaningful — correctness of scored candidates is)."""
-    from s3_manifest_spark.operators.similarity import (
-        similarity_ann_lsh_neighbors,
-    )
-
-    bf = q["similarity_topk"](spark, SF).toPandas()
-    ann = similarity_ann_lsh_neighbors(spark, SF).toPandas()
-    assert len(ann) > 0, "6-plane LSH over 500 vectors must yield collisions"
-    assert set(ann.columns) == set(bf.columns)
-    assert (ann.groupby("query_id").size() <= 5).all()
-    # any (query, neighbor) also in brute-force output must agree on cos
-    merged = ann.merge(bf, on=["query_id", "neighbor_id"], suffixes=("_a", "_b"))
-    if len(merged):
-        assert (merged.cos_sim_a - merged.cos_sim_b).abs().max() < 1e-9
-
-
 def test_multimodal_decode_plumbing(spark, q):
     pdf = q["multimodal_decode"](spark, SF).toPandas()
     assert len(pdf) == 500
@@ -481,27 +435,6 @@ def test_min_label_components_log_rounds_on_chain(spark):
     assert rounds <= 10, f"path-halving should need ~log2(64) rounds, took {rounds}"
 
 
-def test_similarity_query_set_is_hard_capped(spark):
-    """The driver-collected query set must respect MAX_QUERIES with
-    deterministic lowest-id selection — the documented driver/broadcast
-    memory bound for corpora where N/QUERY_STRIDE alone would grow
-    without limit."""
-    import s3_manifest_spark.operators.similarity as sim
-    from s3_manifest_spark.sources.tables import load_table
-
-    v = load_table(spark, SF, "embeddings").select("vec_id", "embedding")
-    old = sim.MAX_QUERIES
-    try:
-        sim.MAX_QUERIES = 3
-        pdf = sim._query_pdf(v)
-        assert list(pdf["vec_id"]) == [0, 100, 200]
-    finally:
-        sim.MAX_QUERIES = old
-    full = sim._query_pdf(v)
-    assert len(full) <= sim.MAX_QUERIES
-    assert (full["vec_id"] % sim.QUERY_STRIDE == 0).all()
-
-
 def test_embedding_lsh_sparse_equals_dense_on_planted_set(spark):
     """The id-only sparse plan and the packed dense plan must emit the
     SAME pair set (both verify exactly; only candidate generation
@@ -563,51 +496,6 @@ def test_plant_id_guard_rejects_colliding_corpus(spark, tmp_path):
         _assert_plant_ids_disjoint(spark, d)
 
 
-def test_ann_certificates_detect_broken_ann(spark, q):
-    """The registered similarity_ann_lsh / similarity_ivf entries are
-    COMPLETENESS certificates: exact_kth_sim per query plus a
-    deterministic flag (every exact-top-k member the query's canonical
-    buckets/cells probe must appear in the ANN output).  The flag must
-    be TRUE for the working ANNs and must FALSIFY when the ANN is
-    deliberately broken (queries hashed with mismatched planes; IVF
-    probing the farthest cells) — proving the certificate arithmetic
-    is load-bearing, not vacuously true."""
-    from s3_manifest_spark.operators.similarity import (
-        _ann_certificate,
-        _lsh_membership,
-        similarity_ann_lsh_neighbors,
-        similarity_ivf_neighbors,
-    )
-
-    for name in ("similarity_ann_lsh", "similarity_ivf"):
-        cert = q[name](spark, SF).toPandas()
-        assert set(cert.columns) == {
-            "query_id",
-            "exact_kth_sim",
-            "ann_complete_ok",
-        }
-        assert len(cert) > 0
-        assert cert["ann_complete_ok"].all(), name
-
-    broken_lsh = _ann_certificate(
-        spark,
-        SF,
-        similarity_ann_lsh_neighbors(spark, SF, query_seed_offset=17),
-        _lsh_membership(spark, SF),
-    ).toPandas()
-    assert not broken_lsh["ann_complete_ok"].all()
-    _, membership = similarity_ivf_neighbors(
-        spark, SF, probe_farthest=True, with_membership=True
-    )
-    broken_ivf = _ann_certificate(
-        spark,
-        SF,
-        similarity_ivf_neighbors(spark, SF, probe_farthest=True),
-        membership,
-    ).toPandas()
-    assert not broken_ivf["ann_complete_ok"].all()
-
-
 def test_wav_decoder_is_real():
     """decode_wav_pcm must WALK the RIFF chunk list, not pattern-match
     our generator: round-trips the encoder, decodes a hand-written WAV
@@ -649,39 +537,6 @@ def test_wav_decoder_is_real():
     for bad in (b"RIFX" + asset[4:], asset[:-1], bad_fmt):
         with pytest.raises(ValueError):
             decode_wav_pcm(bad)
-
-
-def test_pq_certificate_and_falsification(spark, q):
-    """similarity_pq is the same completeness-certificate shape as the
-    LSH/IVF ANNs: flag must be TRUE for the working PQ scan and must
-    FALSIFY with negated ADC tables (worst candidates ranked first, so
-    canonically-findable exact members drop out of the refine set)."""
-    import numpy as np
-
-    from s3_manifest_spark.operators.similarity import (
-        PQ_M,
-        _ann_certificate,
-        _pq_codebooks,
-        similarity_pq_neighbors,
-        similarity_topk,
-    )
-
-    cert = q["similarity_pq"](spark, SF).toPandas()
-    assert set(cert.columns) == {"query_id", "exact_kth_sim", "ann_complete_ok"}
-    assert len(cert) > 0
-    assert cert["ann_complete_ok"].all()
-
-    ann, membership = similarity_pq_neighbors(
-        spark, SF, with_membership=True, corrupt_lut=True
-    )
-    broken = _ann_certificate(spark, SF, ann, membership).toPandas()
-    assert not broken["ann_complete_ok"].all()
-
-    # the trained codebooks must be a real quantizer: M subspace
-    # tables, all-finite, and not collapsed to a single centroid
-    books = _pq_codebooks(spark, SF)
-    assert books.shape[0] == PQ_M and np.isfinite(books).all()
-    assert np.unique(books.round(6), axis=1).shape[1] > 1
 
 
 def test_minhash_recall_certificate_precondition():
@@ -1096,56 +951,3 @@ def test_corpus_pos_certifies_positive_path(spark):
         i + CORPUS_POS_OFFSET for i in range(CORPUS_POS_SEEDS)
     ]
     assert (out["cos_sim"] == 1.0).all()
-
-
-def test_ivf_pq_certificate_falsification_and_routing(spark, q):
-    """similarity_ivf_pq composes the two trained indexes: the
-    certificate must hold for the working scan, must FALSIFY with
-    negated ADC tables, and the raw neighbor relation must respect
-    cell routing — every returned neighbor lives in one of its
-    query's canonical probed cells (the composition's defining
-    property; a PQ-only scan would violate it)."""
-    import numpy as np
-
-    from s3_manifest_spark.operators.similarity import (
-        IVF_NPROBE,
-        _ann_certificate,
-        _ivf_centroids,
-        _query_pdf,
-        similarity_ivf_pq_neighbors,
-    )
-    from s3_manifest_spark.sources.tables import load_table
-
-    cert = q["similarity_ivf_pq"](spark, SF).toPandas()
-    assert set(cert.columns) == {"query_id", "exact_kth_sim", "ann_complete_ok"}
-    assert len(cert) > 0
-    assert cert["ann_complete_ok"].all()
-
-    ann, membership = similarity_ivf_pq_neighbors(
-        spark, SF, with_membership=True, corrupt_lut=True
-    )
-    broken = _ann_certificate(spark, SF, ann, membership).toPandas()
-    assert not broken["ann_complete_ok"].all()
-
-    # routing check, recomputed independently in numpy
-    v = load_table(spark, SF, "embeddings").collect()
-    ids = np.array([r["vec_id"] for r in v], dtype="int64")
-    m = np.stack([np.asarray(r["embedding"], dtype="float64") for r in v])
-    m /= np.linalg.norm(m, axis=1, keepdims=True)
-    cent = _ivf_centroids(spark, SF)
-    centn = cent / np.maximum(np.linalg.norm(cent, axis=1, keepdims=True), 1e-12)
-    cells = {int(i): int(c) for i, c in zip(ids, np.argmax(m @ centn.T, axis=1))}
-    qpdf = _query_pdf(
-        load_table(spark, SF, "embeddings").select("vec_id", "embedding")
-    )
-    qm = np.stack(qpdf["embedding"].to_numpy()).astype("float64")
-    qm /= np.linalg.norm(qm, axis=1, keepdims=True)
-    probes = np.argsort(-(qm @ centn.T), kind="stable", axis=1)[:, :IVF_NPROBE]
-    probe_of = {
-        int(qid): set(int(c) for c in probes[i])
-        for i, qid in enumerate(qpdf["vec_id"])
-    }
-    out = similarity_ivf_pq_neighbors(spark, SF).toPandas()
-    assert len(out) > 0
-    for _, row in out.iterrows():
-        assert cells[int(row["neighbor_id"])] in probe_of[int(row["query_id"])], row

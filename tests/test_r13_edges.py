@@ -1,7 +1,6 @@
 """Edge-case pins for the r13 extension operators — the degenerate
 shapes the fixtures never isolate: tiny corpora, single-member
-groups, single-row covariance, identical documents, clique graphs,
-and the shared-quantizer contract between the IVF family members.
+groups, single-row covariance, identical documents and clique graphs.
 All synthetic frames route through monkeypatched loaders and call the
 module-level (unmemoized) functions, so nothing poisons the session
 plan cache (register() returns the raw fn)."""
@@ -118,26 +117,6 @@ def test_triangles_on_k4_clique(spark, monkeypatch):
     assert (res["degree"] == 3).all()
     assert (res["triangle_count"] == 3).all()
     assert int(res["triangle_count"].sum()) == 12
-
-
-def test_ivf_family_shares_one_quantizer(spark):
-    """_ivf_centroids is the ONE coarse quantizer model: similarity_ivf
-    and similarity_ivf_pq must serve the identical cached array (no
-    second fit, no divergent routing between the family members)."""
-    from s3_manifest_spark.registry import clear_model_cache
-
-    clear_model_cache(spark)
-    try:
-        c1 = S._ivf_centroids(spark, SF)
-        # a second call — and the composed index's internal call —
-        # must return the SAME cached object, not a refit
-        assert S._ivf_centroids(spark, SF) is c1
-        S.similarity_ivf_pq_neighbors(spark, SF).toPandas()
-        assert S._ivf_centroids(spark, SF) is c1
-        mc = getattr(spark, "_smsp_model_cache", {})
-        assert ("ivf", SF) in mc
-    finally:
-        clear_model_cache(spark)
 
 
 def test_attribution_all_purchase_user(spark, monkeypatch):

@@ -111,23 +111,15 @@ def test_fused_certificate_single_agg_and_values(spark):
     member is missing from the ANN output."""
     from s3_manifest_spark.operators.similarity import _ann_certificate
 
-    exact = spark.createDataFrame(
-        [
-            (1, 10, 0.9),
-            (1, 11, 0.8),
-            (2, 20, 0.7),
-            (2, 21, 0.6),
-        ],
-        "query_id long, neighbor_id long, cos_sim double",
-    )
+    # the exact members with their cosines, fused into the membership
     membership = spark.createDataFrame(
         [
-            (1, 10, True),
-            (1, 11, False),
-            (2, 20, True),
-            (2, 21, True),
+            (1, 10, 0.9, True),
+            (1, 11, 0.8, False),
+            (2, 20, 0.7, True),
+            (2, 21, 0.6, True),
         ],
-        "query_id long, neighbor_id long, should_find boolean",
+        "query_id long, neighbor_id long, cos_sim double, should_find boolean",
     )
     # ann misses (2, 21) although it is probed -> query 2 incomplete
     ann = spark.createDataFrame(
@@ -137,7 +129,7 @@ def test_fused_certificate_single_agg_and_values(spark):
         ],
         "query_id long, neighbor_id long, cos_sim double",
     )
-    cert = _ann_certificate(spark, "unused", ann, membership, exact=exact)
+    cert = _ann_certificate(ann, membership)
     rows = {r["query_id"]: r for r in cert.collect()}
     assert rows[1]["exact_kth_sim"] == pytest.approx(0.8)
     assert rows[1]["ann_complete_ok"] is True  # 11 unprobed, vacuous

@@ -7,9 +7,6 @@
   append-mode streaming aggregation (whose finalized windows are only
   emitted in the trailing no-data batch) — the guard re-enables
   Spark's default for that shape.
-- ``similarity_ann_lsh_neighbors``' query-probe broadcast is session
-  state: one broadcast per (sf_dir, seed offset), not one per call,
-  and ``clear_model_cache`` destroys it.
 - the LSH hyperplane matrix has ONE construction point
   (``_lsh_plane_matrix``) shared by driver-side probe derivation and
   the executor kernels.
@@ -102,38 +99,13 @@ def test_no_data_guard_append_aggregation(spark):
     assert _drain_no_data_conf(plain, "append") == DRAIN_NO_DATA_BATCHES
 
 
-def test_lsh_probe_broadcast_is_session_state(spark, sf_dir):
-    """One query-probe broadcast per (sf_dir, seed offset): a second
-    serving call reuses the cached broadcast (ADVICE r17 — the old
-    path leaked one ~2 MB broadcast per warm call), and
-    clear_model_cache destroys it."""
-    from s3_manifest_spark.operators.similarity import (
-        similarity_ann_lsh_neighbors,
-    )
-    from s3_manifest_spark.registry import clear_model_cache
-
-    clear_model_cache(spark)
-    similarity_ann_lsh_neighbors(spark, sf_dir).count()
-    mc = spark._smsp_model_cache
-    key = ("lsh_query_probes", sf_dir, 0)
-    assert key in mc
-    bc = mc[key]
-    similarity_ann_lsh_neighbors(spark, sf_dir).count()
-    assert mc[key] is bc  # reused, not re-broadcast
-    clear_model_cache(spark)
-    assert key not in spark._smsp_model_cache
-    # destroyed JVM-side: the broadcast's executor blocks are gone (the
-    # driver-local Python mirror of .value stays readable by design, so
-    # probe the JVM handle instead)
-    assert bc._jbroadcast.isValid() is False
-
-
 def test_fused_certificate_equals_join_path(spark, sf_dir):
-    """The r18 corpus-wide certificate path (membership pre-fused with
+    """The corpus-wide certificate path (membership pre-fused with
     cos_sim at build time + per-query found-set aggregation) must
-    produce row-identical output to the r17 exact⋈membership⋈found
-    join path — on the working sweep AND on a broken sweep (so the
-    completeness flag stays falsifiable through the new shape)."""
+    produce row-identical output to the exact⋈membership⋈found join
+    semantics, recomputed here in pandas — on the working sweep AND on
+    a broken sweep (so the completeness flag stays falsifiable through
+    the fused shape)."""
     from s3_manifest_spark.operators.similarity import (
         _ann_certificate,
         _knn_ann_membership,
@@ -146,39 +118,39 @@ def test_fused_certificate_equals_join_path(spark, sf_dir):
     exact = _knn_exact_cached(spark, sf_dir)
     fused = _knn_ann_membership(spark, sf_dir, exact)
     assert "cos_sim" in fused.columns  # production exact → fused build
-    bare = fused.select("vec_id", "neighbor_id", "should_find")
+    exact_pdf = exact.select("vec_id", "neighbor_id", "cos_sim").toPandas()
+    bare = fused.select("vec_id", "neighbor_id", "should_find").toPandas()
 
     for radius in (None, 0):  # working sweep, then broken (radius-0)
         kwargs = {} if radius is None else {"probe_radius": radius}
         ann = knn_graph_ann_neighbors(spark, sf_dir, **kwargs)
-        args = dict(
-            spark=spark,
-            sf_dir=sf_dir,
-            exact=exact.withColumnRenamed("vec_id", "query_id"),
-            broadcast_found=False,
-        )
         new = (
             _ann_certificate(
-                ann=ann.withColumnRenamed("vec_id", "query_id"),
-                membership=fused.withColumnRenamed("vec_id", "query_id"),
-                **args,
+                ann.withColumnRenamed("vec_id", "query_id"),
+                fused.withColumnRenamed("vec_id", "query_id"),
+                broadcast_found=False,
             )
             .toPandas()
             .sort_values("query_id")
             .reset_index(drop=True)
         )
+        # the join path: exact ⟕ membership ⟕ found, one groupBy
+        found = ann.select("vec_id", "neighbor_id").toPandas().assign(found=True)
+        j = exact_pdf.merge(bare, on=["vec_id", "neighbor_id"], how="left").merge(
+            found, on=["vec_id", "neighbor_id"], how="left"
+        )
+        j["ok"] = ~(j["should_find"].eq(True) & j["found"].isna())
         old = (
-            _ann_certificate(
-                ann=ann.withColumnRenamed("vec_id", "query_id"),
-                membership=bare.withColumnRenamed("vec_id", "query_id"),
-                **args,
-            )
-            .toPandas()
-            .sort_values("query_id")
-            .reset_index(drop=True)
+            j.groupby("vec_id")
+            .agg(exact_kth_sim=("cos_sim", "min"), ann_complete_ok=("ok", "min"))
+            .reset_index()
+            .rename(columns={"vec_id": "query_id"})
         )
-        assert new.equals(old)
-        if radius == 0:  # the broken sweep must falsify through BOTH paths
+        old["exact_kth_sim"] = old["exact_kth_sim"].round(6)
+        assert new["query_id"].tolist() == old["query_id"].tolist()
+        assert new["exact_kth_sim"].tolist() == old["exact_kth_sim"].tolist()
+        assert new["ann_complete_ok"].tolist() == old["ann_complete_ok"].tolist()
+        if radius == 0:  # the broken sweep must falsify
             assert not new["ann_complete_ok"].all()
     clear_model_cache(spark)
 

@@ -1,15 +1,33 @@
 #!/usr/bin/env python
-"""Regenerate PLANS.md: formatted physical plans of the headline
-queries with one-line commentary — the `.explain("formatted")` audit
-trail for the plans the engine actually produces.
+"""Physical-plan dumps of registered queries.
+
+Headline audit — regenerate PLANS.md: formatted physical plans of the
+headline queries with one-line commentary, the `.explain("formatted")`
+audit trail for the plans the engine actually produces:
 
     python tools/dump_plans.py > PLANS.md
+
+Before/after warm plans — write DIR/<query>_<tag>.txt for a change's
+plan diff.  Each query runs once cold (the first call builds session
+caches and models), then its WARM plan — the shape the benchmarks time
+— is captured, so before/after diffs compare serving plans, not
+one-off builds.  Run the `before` leg from a checkout of the parent
+commit (copy this script into it) with the same --out:
+
+    python tools/dump_plans.py --queries q1,q2 --tag after --out plans/x
+    SPARK_GRAFT_SF_DIR=<fixture dir> python tools/dump_plans.py --queries ...
+
+The warm-plan mode reads SPARK_GRAFT_SF_DIR (default: the sf0.01 fixture
+next to SF).
 """
 
 from __future__ import annotations
 
+import argparse
+import io
 import os
 import sys
+from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -138,7 +156,33 @@ HEADLINERS = {
 }
 
 
+def dump_warm(qs, spark, queries: list[str], tag: str, out: str) -> None:
+    """Write each query's warm serving plan to ``out/<query>_<tag>.txt``."""
+    sf = os.environ.get("SPARK_GRAFT_SF_DIR", os.path.join(os.path.dirname(SF), "sf0.01"))
+    os.makedirs(out, exist_ok=True)
+    for name in queries:
+        qs[name](spark, sf).count()  # warm session caches / models
+        spark._smsp_plan_cache.clear()  # noqa: SLF001 — rebuild the plan warm
+        df = qs[name](spark, sf)
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            df.explain("formatted")
+        path = os.path.join(out, f"{name}_{tag}.txt")
+        with open(path, "w") as fh:
+            fh.write(f"# {name} — {tag} (warm serving plan, {sf})\n")
+            fh.write(buf.getvalue())
+        print(f"wrote {path}")
+
+
 def main() -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--queries", help="comma-separated registered query names")
+    ap.add_argument("--tag", default="after", help="file suffix, e.g. before|after")
+    ap.add_argument("--out", help="output directory for <query>_<tag>.txt")
+    args = ap.parse_args()
+    if bool(args.queries) != bool(args.out):
+        ap.error("--queries and --out go together")
+
     from s3_manifest_spark.session import get_spark
 
     spark = get_spark(app_name="dump-plans", extra_confs={"spark.ui.enabled": "false"})
@@ -147,6 +191,9 @@ def main() -> int:
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
+    if args.queries:
+        dump_warm(qs, spark, args.queries.split(","), args.tag, args.out)
+        return 0
     print("# PLANS — physical-plan audit of the headline queries")
     print()
     print("Generated by `python tools/dump_plans.py` at sf0.001 (plan shape")

@@ -62,9 +62,7 @@ from s3_manifest_spark.operators.dedup import (  # noqa: E402
 )
 from s3_manifest_spark.operators.similarity import (  # noqa: E402
     PQ_M,
-    similarity_ann_lsh_neighbors,
-    similarity_ivf_neighbors,
-    similarity_pq_neighbors,
+    ann_neighbors,
     similarity_topk,
 )
 
@@ -118,15 +116,9 @@ def probe(sf_dir: str, tag: str) -> dict:
     res = {}
     cases = {
         "similarity_topk (brute BLAS)": lambda: similarity_topk(spark, sf_dir),
-        "similarity_ann_lsh_neighbors": lambda: similarity_ann_lsh_neighbors(
-            spark, sf_dir
-        ),
-        "similarity_ivf_neighbors": lambda: similarity_ivf_neighbors(
-            spark, sf_dir
-        ),
-        "similarity_pq_neighbors": lambda: similarity_pq_neighbors(
-            spark, sf_dir
-        ),
+        "ann_neighbors(lsh)": lambda: ann_neighbors(spark, sf_dir, "lsh"),
+        "ann_neighbors(ivf)": lambda: ann_neighbors(spark, sf_dir, "ivf"),
+        "ann_neighbors(pq)": lambda: ann_neighbors(spark, sf_dir, "pq"),
         "dedup_ngram_jaccard (pair relation)": lambda: dedup_ngram_jaccard(
             spark, sf_dir
         ),

@@ -340,16 +340,13 @@ def main() -> int:
     # ANN search a consumer pays" vs "the exact-baseline verification
     # the certificate deliberately recomputes".
     from s3_manifest_spark.operators.similarity import (
+        ann_neighbors,
         knn_graph_ann_neighbors,
-        similarity_ann_lsh_neighbors,
-        similarity_ivf_neighbors,
-        similarity_ivf_pq_neighbors,
-        similarity_pq_neighbors,
     )
 
-    def run_neighbors(fn):
+    def run_neighbors(fn, *args):
         def f():
-            fn(spark, sf).toPandas()
+            fn(spark, sf, *args).toPandas()
 
         return f
 
@@ -453,14 +450,10 @@ def main() -> int:
         "q:manifest_prune": run_query("manifest_prune"),
         "q:skew_report": run_query("skew_report"),
         # raw-ANN vs certificate split
-        "ann:similarity_ann_lsh_neighbors": run_neighbors(
-            similarity_ann_lsh_neighbors
-        ),
-        "ann:similarity_ivf_neighbors": run_neighbors(similarity_ivf_neighbors),
-        "ann:similarity_pq_neighbors": run_neighbors(similarity_pq_neighbors),
-        "ann:similarity_ivf_pq_neighbors": run_neighbors(
-            similarity_ivf_pq_neighbors
-        ),
+        "ann:lsh": run_neighbors(ann_neighbors, "lsh"),
+        "ann:ivf": run_neighbors(ann_neighbors, "ivf"),
+        "ann:pq": run_neighbors(ann_neighbors, "pq"),
+        "ann:ivf_pq": run_neighbors(ann_neighbors, "ivf_pq"),
         "ann:knn_graph_ann_neighbors": run_neighbors(knn_graph_ann_neighbors),
         "ann:knn_graph_ann_neighbors_served": served_index_sweep,
         "ann:knn_sampled_sweep": sampled_sweep,

@@ -62,10 +62,11 @@ from s3_manifest_spark.operators.dedup import (  # noqa: E402
 from s3_manifest_spark.operators.similarity import (  # noqa: E402
     PQ_M,
     PQ_REFINE,
-    TOP_K,
-    _pq_adc,
+    _merge,
     _pq_codebooks,
-    _pq_encode,
+    _QueryState,
+    _refine,
+    _scan,
 )
 from s3_manifest_spark.sources.tables import load_table  # noqa: E402
 
@@ -218,83 +219,14 @@ dsub = books.shape[2]
 lut = np.stack(
     [qm[:, m * dsub : (m + 1) * dsub] @ books[m].T for m in range(PQ_M)], axis=1
 )
-bc = spark.sparkContext.broadcast((qids, qm, books, lut))
+# the protocol's query state for the fixed query set: no routing, ADC
+# scorer (the "pq" family), so the timed plan is the operator's own
+# scan + window merge + exact refine
+bc = spark.sparkContext.broadcast(_QueryState(qids, qm, None, None, books, lut))
 
 
 def pq_scan_core(v) -> int:
-    r_keep = PQ_REFINE
-
-    def scan(batches):
-        ids_q, _, bks, tables = bc.value
-        for b in batches:
-            nids = b["vec_id"].to_numpy(dtype="int64")
-            e = np.stack(b["embedding"].to_numpy()).astype("float64")
-            en = e / np.linalg.norm(e, axis=1, keepdims=True)
-            codes = _pq_encode(en, bks)
-            out_q, out_n, out_s = [], [], []
-            for j, qid in enumerate(ids_q):
-                adc = _pq_adc(codes, tables[j])
-                keep = nids != qid
-                cand_ids, cand_adc = nids[keep], adc[keep]
-                order = np.lexsort((cand_ids, -cand_adc))[:r_keep]
-                out_q.append(np.full(len(order), qid))
-                out_n.append(cand_ids[order])
-                out_s.append(cand_adc[order])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "neighbor_id": np.concatenate(out_n),
-                        "adc": np.concatenate(out_s),
-                    }
-                )
-
-    cands = v.mapInPandas(
-        scan, schema="query_id long, neighbor_id long, adc double"
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("adc").desc(), F.col("neighbor_id")
-    )
-    global_cands = (
-        cands.select("*", F.row_number().over(w_adc).alias("rn"))
-        .filter(F.col("rn") <= r_keep)
-        .select("query_id", "neighbor_id")
-    )
-    refine_src = v.withColumnRenamed("vec_id", "neighbor_id").join(
-        F.broadcast(global_cands), "neighbor_id"
-    )
-
-    def refine(batches):
-        ids_q, queries, _, _ = bc.value
-        qrow = {int(q): i for i, q in enumerate(ids_q)}
-        for b in batches:
-            if not len(b):
-                continue
-            e = np.stack(b["embedding"].to_numpy()).astype("float64")
-            en = e / np.linalg.norm(e, axis=1, keepdims=True)
-            qi = np.array(
-                [qrow[int(q)] for q in b["query_id"].to_numpy()], dtype=np.int64
-            )
-            sims = np.round(np.einsum("ij,ij->i", queries[qi], en), 6)
-            yield pd.DataFrame(
-                {
-                    "query_id": b["query_id"].to_numpy().astype("int64"),
-                    "neighbor_id": b["neighbor_id"].to_numpy().astype("int64"),
-                    "cos_sim": sims,
-                }
-            )
-
-    refined = refine_src.mapInPandas(
-        refine, schema="query_id long, neighbor_id long, cos_sim double"
-    )
-    w_cos = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        refined.select("*", F.row_number().over(w_cos).alias("rn"))
-        .filter(F.col("rn") <= TOP_K)
-        .count()
-    )
+    return _refine(v, bc, _merge(_scan(v, bc, PQ_REFINE), PQ_REFINE)).count()
 
 
 print(f"building {COPIES}x embedding corpus...", flush=True)

@@ -116,11 +116,7 @@ def main() -> int:
 
     def leg_cert():
         sim._ann_certificate(
-            spark,
-            sf,
-            sweep_ckpt,
-            membership.withColumnRenamed("vec_id", "query_id"),
-            exact=exact.withColumnRenamed("vec_id", "query_id"),
+            sweep_ckpt, membership.withColumnRenamed("vec_id", "query_id")
         ).toPandas()
 
     def _identity_pass(df, keep):
