@@ -14,9 +14,28 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from s3_manifest_spark import registry
+from s3_manifest_spark import registry, session
 
 SF_SMOKE_DIR = "/root/testdata/sf0.001"
+
+
+#: The session.py confs asserted on the hosting session (values come
+#: from session.py's tables): the semantics the whole engine assumes —
+#: tz-naive-UTC ms timestamps to match the reference
+#: (main.rs:140-144) and the DuckDB oracle; ANSI off, because the
+#: reference defaults every unparseable/out-of-range value instead of
+#: erroring (main.rs:373-387) — and the runtime-settable scale confs a
+#: plain session lacks (AQE with size-driven post-shuffle coalescing;
+#: CPU-dense queries opt back out per query via
+#: registry.prefer_parallel_exchanges).
+_HOST_CONFS = (
+    "spark.sql.session.timeZone",
+    "spark.sql.parquet.outputTimestampType",
+    "spark.sql.ansi.enabled",
+    "spark.sql.adaptive.enabled",
+    "spark.sql.adaptive.coalescePartitions.enabled",
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst",
+)
 
 
 def _configure(spark: SparkSession) -> SparkSession:
@@ -25,27 +44,11 @@ def _configure(spark: SparkSession) -> SparkSession:
     if getattr(spark, "_smsp_configured", False):
         return spark
     spark._smsp_configured = True
-    # Semantics the whole engine assumes (see s3_manifest_spark.session):
-    # tz-naive-UTC ms timestamps to match the reference (main.rs:140-144)
-    # and the DuckDB oracle.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MILLIS")
-    # ANSI off: the reference defaults every unparseable/out-of-range
-    # value instead of erroring (main.rs:373-387) — under Spark 4's
-    # ANSI-on default, garbage timestamps/casts would throw instead of
-    # coalescing to the documented defaults.
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    # Runtime-settable scale confs, in case the hosting session was
-    # built without them (a plain session defaults to 200 shuffle
-    # partitions — pure task overhead at fixture scale).
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    # Size-driven post-shuffle coalescing (see session.py: -20-30%
-    # across the small-exchange classes; CPU-dense queries opt back
-    # out per query via registry.prefer_parallel_exchanges).
-    spark.conf.set(
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst", "false"
-    )
+    confs = {**session._SEMANTIC_CONFS, **session._SCALE_CONFS}
+    for key in _HOST_CONFS:
+        spark.conf.set(key, confs[key])
+    # A plain session defaults to 200 shuffle partitions — pure task
+    # overhead at fixture scale.
     if int(spark.conf.get("spark.sql.shuffle.partitions", "200")) > 64:
         spark.conf.set("spark.sql.shuffle.partitions", "32")
     return spark

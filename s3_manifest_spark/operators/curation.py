@@ -16,7 +16,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from s3_manifest_spark.registry import register, track_persist, session_model_cache
+from s3_manifest_spark.registry import (
+    register,
+    release,
+    session_model_cache,
+    track_persist,
+)
 from s3_manifest_spark.sources.tables import load_table, parquet_row_count
 
 CHUNK_TOKENS = 30
@@ -214,9 +219,7 @@ def _tfidf_dfreq(spark: SparkSession, sf_dir: str):
         dfreq = {r["term"]: r["dfreq"] for r in head}
         value: object = spark.sparkContext.broadcast(dfreq)
         # the dict is the model now; free the checkpoint blocks
-        from s3_manifest_spark.registry import _release_checkpoint_blocks
-
-        _release_checkpoint_blocks(dfreq_ckpt)
+        release(dfreq_ckpt)
     else:
         value = dfreq_ckpt
     model_cache[("tfidf_dfreq", sf_dir)] = value
@@ -1578,7 +1581,6 @@ SHUFFLE_PARTITIONS = 8
 def global_ordinal(
     df: DataFrame,
     sort_cols: list,
-    eager_cleanup: bool = False,
     model_key: tuple | None = None,
 ) -> DataFrame:
     """Dense 0-based global ordinal under ``sort_cols`` order — the
@@ -1593,12 +1595,9 @@ def global_ordinal(
        what ``row_number() OVER (ORDER BY ...)`` would degenerate to.
 
     The partition layout must stay frozen between the metadata and
-    ordinal passes (offsets are keyed by partition id) — handled by
-    ``registry.pin_partitions``, same contract as
-    ``quantiles.group_percentiles``: registry queries persist with
-    deferred cleanup; library callers pass ``eager_cleanup=True`` for
-    a localCheckpoint (lineage truncated, nothing routed through the
-    driver, blocks freed on GC).
+    ordinal passes (offsets are keyed by partition id) — pinned for
+    the caller's query scope by ``registry.pin_partitions`` (the
+    registry module docstring has the contract).
     """
     from s3_manifest_spark.operators.sort_offsets import (
         cached_sort_meta,
@@ -1621,9 +1620,7 @@ def global_ordinal(
             model_key,
         )
     else:
-        data = pinned_range_sort(
-            df, SHUFFLE_PARTITIONS, sort_cols, eager_cleanup
-        )
+        data = pinned_range_sort(df, SHUFFLE_PARTITIONS, sort_cols)
         meta = partition_weights(data, [], F.count(F.lit(1)))
     offsets, _ = exclusive_offsets(meta)
     b_off = spark.sparkContext.broadcast(offsets)

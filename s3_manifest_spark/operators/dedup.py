@@ -15,10 +15,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from s3_manifest_spark.registry import (
-    session_model_cache,
-    defer_cleanup,
     register,
-    track_cleanup,
+    scoped_conf,
+    session_model_cache,
     track_persist,
 )
 from s3_manifest_spark.sources.tables import load_table, parquet_row_count
@@ -1895,12 +1894,9 @@ def min_label_components(spark: SparkSession, edges: DataFrame):
     # below the corpus — so the per-round shuffles are task-overhead
     # bound at the session's partition count.  Scope them down for the
     # loop; on a cluster this would be sized to the pair-graph volume.
-    # Restored via defer_cleanup so the caller's (lazy) final window
-    # also runs at the loop's partition count.
-    shuffle_key = "spark.sql.shuffle.partitions"
-    old_parts = spark.conf.get(shuffle_key)
-    spark.conf.set(shuffle_key, "4")
-    defer_cleanup(lambda: spark.conf.set(shuffle_key, old_parts))
+    # Query-scoped, so the caller's (lazy) final window also runs at
+    # the loop's partition count.
+    scoped_conf(spark, "spark.sql.shuffle.partitions", "4")
     rounds = 0
     try:
         # Convergence check: min-label propagation is monotone — each
@@ -1968,7 +1964,6 @@ def min_label_components(spark: SparkSession, edges: DataFrame):
                 break
             prev_sum = new_sum
     except BaseException:
-        spark.conf.set(shuffle_key, old_parts)
         labels.unpersist(blocking=False)
         raise
     return labels, rounds

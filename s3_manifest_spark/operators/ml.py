@@ -356,10 +356,10 @@ def train_bigram_lm(spark: SparkSession, sf_dir: str):
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     train = docs.filter(F.col("doc_id") % LM_TRAIN_MOD == 0)
     toks = F.filter(F.split(F.col("text"), " "), lambda x: x != F.lit(""))
-    # localCheckpoint, not persist + track_cleanup: the earlier form
-    # registered the model's OWN frames with the registry sweeper, so
-    # the very next registered query unpersisted them while the cache
-    # entry lived on — every later lm_perplexity re-paid the training
+    # localCheckpoint, not a persist released with the query scope:
+    # the earlier form registered the model's OWN frames with the
+    # registry's release list, so the very next registered query
+    # unpersisted them while the cache entry lived on — every later lm_perplexity re-paid the training
     # lineage (found by the r12 model-storage audit; the pagerank
     # plan-keyed eviction's self-inflicted cousin).  Checkpoint blocks
     # are owned by the model alone and freed by clear_model_cache via

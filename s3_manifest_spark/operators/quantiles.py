@@ -50,7 +50,6 @@ def group_percentiles(
     df: DataFrame,
     pcts: Sequence[float] = PCTS,
     partitions: int = SORT_PARTITIONS,
-    eager_cleanup: bool = False,
     model_key: tuple | None = None,
 ) -> DataFrame:
     """Exact interpolated percentiles of ``v`` per group ``g`` with NO
@@ -63,10 +62,9 @@ def group_percentiles(
     pick pass runs: the metadata pass keyed the ``want`` map by
     partition id, and a recomputed ``repartitionByRange`` may
     re-sample different range boundaries, silently misaligning the
-    picks.  :func:`~s3_manifest_spark.registry.pin_partitions` handles
-    both lifetimes — registry queries (deferred unpersist) and library
-    callers (``eager_cleanup=True`` → localCheckpoint, no registry
-    dependency, nothing routed through the driver).
+    picks.  :func:`~s3_manifest_spark.registry.pin_partitions` pins it
+    for the caller's query scope (the registry module docstring has
+    the contract).
     """
     import numpy as np
     import pandas as pd
@@ -92,7 +90,7 @@ def group_percentiles(
             model_key,
         )
     else:
-        data = pinned_range_sort(proj, partitions, ["g", "v"], eager_cleanup)
+        data = pinned_range_sort(proj, partitions, ["g", "v"])
         meta = partition_weights(data, ["g"], F.count(F.lit(1)))
 
     # ---- metadata pass: per-(partition, group) counts → target picks

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from s3_manifest_spark.registry import defer_cleanup, register
+from s3_manifest_spark.registry import register, scoped_conf
 from s3_manifest_spark.sources.tables import load_table
 
 
@@ -119,40 +119,24 @@ def star_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # filtered dims relation measures smaller and broadcasts; at
     # 100 TB neither side fits and the join stays a single
     # orderkey-keyed exchange.  The nat/reg hints are explicit, so
-    # threshold=-1 doesn't touch them.  Confs restore at the next
-    # registry sweep (the lazy-plan-safe pattern, dedup.py).
-    static_key = "spark.sql.autoBroadcastJoinThreshold"
-    adaptive_key = "spark.sql.adaptive.autoBroadcastJoinThreshold"
-    old_static = spark.conf.get(static_key)
-    # The adaptive threshold is an OPTIONAL conf: unset means "fall
-    # back to the static threshold", while an EXPLICIT "-1" disables
-    # AQE broadcast conversion outright — so the restore must unset
-    # when it was unset, not write -1 back (writing -1 would kill AQE
-    # sort-merge→broadcast conversion for every later query in the
-    # session).  conf.get(key, None) reads without Spark 4's
-    # default-value type validation.
-    old_adaptive = spark.conf.get(adaptive_key, None)
+    # threshold=-1 doesn't touch them.  Both confs are query-scoped
+    # (registry.scoped_conf): the adaptive threshold is an OPTIONAL
+    # conf whose unset state means "fall back to the static threshold"
+    # — an explicit "-1" would disable AQE broadcast conversion for
+    # every later query — and scoped_conf restores it to unset.
     # Re-entrancy guard (ADVICE r16): if the static threshold is
-    # ALREADY "-1" (a second invocation before the deferred restore
-    # drains — possible when this query is composed inside another
-    # registered query), the swap would copy the override into
-    # adaptive_key and disable AQE broadcast conversion for this very
-    # plan.  The first invocation's deferred restore already covers
-    # the session; skip the swap entirely.
+    # ALREADY "-1" (a second invocation before the scope's release —
+    # possible when this query is composed inside another registered
+    # query), copying it into the adaptive threshold would disable AQE
+    # broadcast conversion for this very plan.  The first invocation's
+    # scope already covers the session; skip the swap entirely.
+    static_key = "spark.sql.autoBroadcastJoinThreshold"
+    old_static = spark.conf.get(static_key)
     if old_static != "-1":
-        spark.conf.set(adaptive_key, old_static)
-        spark.conf.set(static_key, "-1")
-
-        def _restore(
-            k=static_key, ak=adaptive_key, s=old_static, a=old_adaptive
-        ):
-            spark.conf.set(k, s)
-            if a is None:
-                spark.conf.unset(ak)
-            else:
-                spark.conf.set(ak, a)
-
-        defer_cleanup(_restore)
+        scoped_conf(
+            spark, "spark.sql.adaptive.autoBroadcastJoinThreshold", old_static
+        )
+        scoped_conf(spark, static_key, "-1")
     j = li.join(dims, li.l_orderkey == dims.o_orderkey)
     return j.groupBy("n_name").agg(
         F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(

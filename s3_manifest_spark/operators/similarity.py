@@ -58,10 +58,11 @@ from __future__ import annotations
 
 from typing import NamedTuple
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from s3_manifest_spark.registry import register, session_model_cache
+from s3_manifest_spark.registry import register, release, session_model_cache
 from s3_manifest_spark.sources.tables import load_table, parquet_row_count
 
 TOP_K = 5
@@ -692,15 +693,6 @@ def _membership_cached(
     alternate within one bench pass, and a single-slot cache would
     rebuild-and-leak the corpus-pass relation per alternation (r16
     review)."""
-    from s3_manifest_spark.registry import _release_checkpoint_blocks
-
-    def release(f):
-        # both releases — unpersist covers store-loaded frames
-        # (models.py persists parquet reads), the checkpoint release
-        # covers session-built LogicalRDDs; each a no-op for the other
-        f.unpersist(blocking=False)
-        _release_checkpoint_blocks(f)
-
     mc = session_model_cache(spark)
     key = (f"ann_membership_{kind}", sf_dir)
     cached = mc.get(key)
@@ -1636,16 +1628,10 @@ def _knn_ann_index_cached(
         packed, p = cached[0], int(cached[1])
         return packed, p
     if cached is not None:
-        # legacy 1-tuple being rebuilt: free the old frame before
-        # overwriting the only handle (r16 review).  BOTH releases:
-        # unpersist covers store-loaded frames (models.py persists
-        # parquet reads — plan-keyed, not LogicalRDD), the checkpoint
-        # release covers session-built ones; each is a no-op for the
-        # other shape.
-        from s3_manifest_spark.registry import _release_checkpoint_blocks
-
-        cached[0].unpersist(blocking=False)
-        _release_checkpoint_blocks(cached[0])
+        # legacy 1-tuple being rebuilt: free the old frame (store-
+        # loaded or session-built) before overwriting the only handle
+        # (r16 review).
+        release(cached[0])
     v = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     n = parquet_row_count(f"{sf_dir}/embeddings.parquet")
     p = _knn_ann_planes(n)
@@ -1711,14 +1697,9 @@ def _knn_query_pack_cached(
         return cached[0]
     if cached is not None:
         # superseded width (legacy 1-tuple or plane-boundary reload):
-        # free the stale pack before the rebuild drops the only handle
-        # (r16 review).  Both releases — unpersist for store-loaded
-        # frames, checkpoint release for session-built ones; each a
-        # no-op for the other shape.
-        from s3_manifest_spark.registry import _release_checkpoint_blocks
-
-        cached[0].unpersist(blocking=False)
-        _release_checkpoint_blocks(cached[0])
+        # free the stale pack (store-loaded or session-built) before
+        # the rebuild drops the only handle (r16 review).
+        release(cached[0])
     v = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     qv = v.join(
         F.broadcast(exact.select("vec_id").distinct()), "vec_id"
@@ -1782,8 +1763,8 @@ def _knn_query_probes_cached(
     if cached is not None:
         try:  # superseded width: free the stale broadcast's blocks
             cached[0].destroy()
-        except Exception:
-            pass
+        except Py4JJavaError:
+            pass  # session stopped: nothing left to free
     pdf = pack.toPandas()
     grouped: dict[int, list] = {}
     for raw_ids, raw_mat, pblk in zip(

@@ -34,20 +34,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def pinned_range_sort(
-    df: DataFrame,
-    partitions: int,
-    cols: list,
-    eager_cleanup: bool = False,
-) -> DataFrame:
+def pinned_range_sort(df: DataFrame, partitions: int, cols: list) -> DataFrame:
     """Range-partition + sort ``df`` on ``cols`` with the layout frozen
-    (persist via the registry sweeper, or localCheckpoint for library
-    callers — see :func:`~s3_manifest_spark.registry.pin_partitions`)."""
+    for the caller's query scope
+    (:func:`~s3_manifest_spark.registry.pin_partitions`)."""
     from s3_manifest_spark.registry import pin_partitions
 
     return pin_partitions(
-        df.repartitionByRange(partitions, *cols).sortWithinPartitions(*cols),
-        eager_cleanup,
+        df.repartitionByRange(partitions, *cols).sortWithinPartitions(*cols)
     )
 
 
@@ -85,14 +79,12 @@ def cached_sort_meta(
     (localCheckpoint — the layout must outlive the registry call and
     lineage truncation makes a divergent recompute impossible, see
     compaction_plan's inline note), served warm, released by
-    ``clear_model_cache`` (via a ``Releasable`` handle on the
-    checkpointed RDD — a plain ``DataFrame.unpersist()`` is a no-op
-    for localCheckpoint blocks, which never register in the
-    CacheManager), cold build priced in bench cold_sec.  The
+    ``clear_model_cache`` (which frees the checkpointed RDD's blocks —
+    see ``registry.release``), cold build priced in bench cold_sec.  The
     cache key carries partitions + sort cols + group cols so two
     operators sharing a caller-provided ``key_tuple`` but different
     shapes can never serve each other's layout."""
-    from s3_manifest_spark.registry import Releasable, session_model_cache
+    from s3_manifest_spark.registry import session_model_cache
 
     spark = df.sparkSession
     mc = session_model_cache(spark)
@@ -112,10 +104,7 @@ def cached_sort_meta(
         .localCheckpoint(eager=True)
     )
     meta = partition_weights(data, group_cols, weight)
-    # The checkpointed blocks live on the LogicalRDD's backing RDD —
-    # keep its handle so clear_model_cache can actually free them.
-    jrdd = data._jdf.queryExecution().analyzed().rdd()
-    mc[key] = (data, meta, Releasable(lambda: jrdd.unpersist(False)))
+    mc[key] = (data, meta)
     return data, meta
 
 

@@ -4,12 +4,39 @@ Every operator module registers its ``queries()`` entries (and, where
 SQL-expressible, the DuckDB oracle twin) via :func:`register`.  The
 driver contract requires identical column names between the Spark
 DataFrame and the oracle result — alias both sides, always.
+
+Query scope
+-----------
+A registered query returns a LAZY plan that its caller evaluates after
+the function has returned, so state the plan still needs — persisted
+intermediates, scratch spools, session-conf overrides — cannot be
+released by the query itself.  Each caller (thread) owns one release
+list instead:
+
+- :func:`track_persist`, :func:`defer_cleanup`, :func:`scoped_conf`
+  (and :func:`pin_partitions` inside a query) append a release
+  callback to the CALLING thread's list;
+- that caller's next OUTERMOST registered call runs its list, last
+  added first, before building anything — by then the caller has
+  materialized its previous result — and touches no other caller's
+  list;
+- a registered call made while the caller's scope is already open (a
+  certificate composing another registered query) is nested: it
+  releases nothing, and its callbacks join the open list;
+- lists left by threads that have since exited are released by the
+  next outermost registered call on any thread.
+
+Session confs set through :func:`scoped_conf` are session-wide: a
+concurrent caller's plan may be built under another caller's override,
+which changes plan shape, never answers.
 """
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -17,81 +44,108 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
-#: DataFrames persisted by registry queries via :func:`track_persist`,
-#: awaiting cleanup at the NEXT registry invocation (their owner's
-#: result is evaluated lazily by the caller after the function
-#: returns, so the owner cannot unpersist them itself).
-_TRACKED_PERSISTS: list[DataFrame] = []
 
-#: Arbitrary cleanup callbacks registered by queries whose returned
-#: (lazy) result still depends on query-scoped state — e.g. a session
-#: conf override that must stay live until the caller evaluates the
-#: frame.  Run at the NEXT registry invocation, after the persists.
-_DEFERRED_CLEANUPS: list[Callable[[], None]] = []
+class _Scope:
+    """One caller's query scope (module docstring): its pending release
+    callbacks, and whether an outermost registered call is running."""
 
-#: Nesting depth of registered-query calls (certificates compose other
-#: registered queries); only depth-0 entry runs the cleanup sweep.
-_CALL_DEPTH = 0
+    __slots__ = ("open", "releases")
+
+    def __init__(self) -> None:
+        self.open = False
+        self.releases: list[Callable[[], None]] = []
+
+
+_SCOPES: dict[threading.Thread, _Scope] = {}
+_SCOPES_LOCK = threading.Lock()
+
+
+def _scope() -> _Scope:
+    with _SCOPES_LOCK:
+        return _SCOPES.setdefault(threading.current_thread(), _Scope())
+
+
+def _release_scope(scope: _Scope) -> None:
+    """Run ``scope``'s release list and those of exited threads."""
+    with _SCOPES_LOCK:
+        orphans = [_SCOPES.pop(t) for t in list(_SCOPES) if not t.is_alive()]
+    for s in (scope, *orphans):
+        while s.releases:
+            s.releases.pop()()
+
+
+def defer_cleanup(fn: Callable[[], None]) -> None:
+    """Run ``fn`` when the caller's query scope is released (module
+    docstring).  For query-scoped state — scratch spools, temp views —
+    that the caller's lazy evaluation still needs after the query
+    function returns."""
+    _scope().releases.append(fn)
 
 
 def track_persist(df: DataFrame) -> DataFrame:
-    """Persist ``df`` and register it for deferred cleanup.
+    """Persist ``df`` and unpersist it when the caller's query scope is
+    released.
 
     Registry queries must use this instead of bare ``.persist()`` so
-    that the next registry call unpersists exactly these blocks — not
-    the whole session cache (``clearCache`` would also evict caches the
-    driver or embedding application created outside the registry).
+    that exactly these blocks are released — not the whole session
+    cache (``clearCache`` would also evict caches the driver or
+    embedding application created outside the registry).
     """
     df.persist()
-    _TRACKED_PERSISTS.append(df)
+    defer_cleanup(lambda: df.unpersist(blocking=False))
     return df
 
 
-def track_cleanup(df: DataFrame) -> DataFrame:
-    """Register an ALREADY-persisted frame for deferred unpersist —
-    for frames persisted with a bare ``.persist()`` inside a loop
-    (where superseded generations are unpersisted eagerly) whose final
-    generation must outlive the query function."""
-    _TRACKED_PERSISTS.append(df)
-    return df
-
-
-def pin_partitions(df: DataFrame, eager_cleanup: bool) -> DataFrame:
+def pin_partitions(df: DataFrame) -> DataFrame:
     """Freeze a frame's partition layout for plans whose later passes
     key off ``spark_partition_id()`` (the sort-based percentile and
     global-ordinal operators): a recomputation could re-sample
     ``repartitionByRange`` boundaries and silently misalign the
     metadata the driver already collected.
 
-    Registry queries (``eager_cleanup=False``) persist via
-    :func:`track_persist` — released at the next registry call.
-    Library callers (``eager_cleanup=True``) get ``localCheckpoint``:
-    partitions materialize in executor storage with lineage truncated,
-    so the layout can never be recomputed differently, nothing routes
-    through the driver, and the blocks free when the frame is
-    garbage-collected — no registry cleanup needed.  (localCheckpoint
-    is not executor-loss-tolerant; at production scale prefer the
-    registry/persist path or a reliable checkpoint dir.)
+    Inside a registered query the frame is persisted with
+    :func:`track_persist` and released with the caller's query scope.
+    Outside one there is no scope to release it, so it is
+    ``localCheckpoint``-ed: partitions materialize in executor storage
+    with lineage truncated, so the layout can never be recomputed
+    differently, nothing routes through the driver, and the blocks
+    free when the frame is garbage-collected.  (localCheckpoint is not
+    executor-loss-tolerant; at production scale prefer a registered
+    query or a reliable checkpoint dir.)
     """
-    if eager_cleanup:
-        return df.localCheckpoint(eager=True)
-    return track_persist(df)
+    if _scope().open:
+        return track_persist(df)
+    return df.localCheckpoint(eager=True)
 
 
-def defer_cleanup(fn: Callable[[], None]) -> None:
-    """Run ``fn`` at the next registry invocation (after persists are
-    released).  For query-scoped session state — conf overrides,
-    temp views — that the caller's lazy evaluation still needs after
-    the query function returns."""
-    _DEFERRED_CLEANUPS.append(fn)
+def scoped_conf(spark: SparkSession, key: str, value: str) -> None:
+    """Set session conf ``key`` to ``value`` for the caller's query
+    scope: the override stays live while the caller evaluates the lazy
+    result, and the scope's release restores the old value — or unsets
+    the key if it was unset (an optional conf's "unset" can mean
+    something an explicit value does not).  Does nothing when ``key``
+    already holds ``value``, so a nested call never restores the
+    override itself.  ``conf.get(key, None)`` reads without Spark 4's
+    default-value type validation."""
+    old = spark.conf.get(key, None)
+    if old == value:
+        return
+    spark.conf.set(key, value)
+
+    def _restore() -> None:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+    defer_cleanup(_restore)
 
 
-def prefer_parallel_exchanges(spark) -> None:
+def prefer_parallel_exchanges(spark: SparkSession) -> None:
     """Query-scoped opt-out of size-driven AQE partition coalescing
     (the session default since r17): restore Spark's
-    parallelism-first policy for THIS query's execution, reverting at
-    the next registry invocation (the lazy-plan-safe conf-swap
-    pattern, star_join_revenue's precedent).
+    parallelism-first policy for THIS query's execution
+    (:func:`scoped_conf`).
 
     For plans whose exchanges are CPU-DENSE PER BYTE — fingerprint /
     shingle-hash aggregations where a kilobyte of shuffle rows carries
@@ -99,40 +153,29 @@ def prefer_parallel_exchanges(spark) -> None:
     the post-shuffle stage onto one or two tasks and serializes the
     CPU (measured 2x on dedup_ngram_jaccard / doc_containment /
     lsh_tuning_curve, FLOOR_CONF_AB.json); parallelism-first keeps
-    those stages wide.  Idempotent and re-entrant: a nested second
-    call sees the policy already parallelism-first and does nothing.
+    those stages wide.
     """
-    key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    old = spark.conf.get(key, None)
-    if old == "true":
-        return
-    spark.conf.set(key, "true")
-
-    def _restore(k=key, o=old):
-        if o is None:
-            spark.conf.unset(k)
-        else:
-            spark.conf.set(k, o)
-
-    defer_cleanup(_restore)
+    scoped_conf(
+        spark, "spark.sql.adaptive.coalescePartitions.parallelismFirst", "true"
+    )
 
 
-class Releasable:
-    """Wrap a non-DataFrame resource held by a model-cache entry so
-    :func:`clear_model_cache` can free it — e.g. the py4j RDD handle
-    backing a ``localCheckpoint`` (whose blocks a ``DataFrame
-    .unpersist()`` would NOT release: checkpointed RDDs never register
-    in the CacheManager, so without this they linger until the
-    ContextCleaner GCs the RDD)."""
-
-    def __init__(self, release_fn: Callable[[], None]):
-        self._release_fn = release_fn
-
-    def release(self) -> None:
-        try:
-            self._release_fn()
-        except Exception:
-            pass  # session already stopped / blocks already freed
+def release(df: DataFrame) -> None:
+    """Free a frame's executor storage, whichever kind holds it:
+    ``unpersist`` covers CacheManager entries (persisted frames, e.g.
+    models.py's store-loaded ones); a ``localCheckpoint``-ed frame
+    never registers there — its blocks hang off the LogicalRDD's
+    backing RDD and would otherwise linger until the ContextCleaner
+    GCs it (ADVICE r11).  Each is a no-op for the other shape.  On a
+    stopped session both raise ``Py4JJavaError``: nothing is left to
+    free."""
+    try:
+        df.unpersist(blocking=False)
+        analyzed = df._jdf.queryExecution().analyzed()
+        if analyzed.getClass().getSimpleName() == "LogicalRDD":
+            analyzed.rdd().unpersist(False)
+    except Py4JJavaError:
+        pass
 
 
 def session_model_cache(spark: SparkSession) -> dict:
@@ -150,14 +193,15 @@ def session_model_cache(spark: SparkSession) -> dict:
 def clear_model_cache(spark: SparkSession) -> None:
     """Release the session model cache (trained quantizers, LSH
     indexes, CDC state, broadcast filters) WITHOUT leaking its
-    payloads: cached DataFrames are unpersisted, broadcasts destroyed
-    (payloads may be bare objects, DataFrames, Broadcasts, or tuples
-    of them).  This — not ``spark._smsp_model_cache.clear()`` — is
-    the supported way to drop models (a bare ``clear()`` orphans the
-    persisted blocks in the BlockManager with no reachable handle).
-    The plan memo is dropped WITH the models: memoized plans may
-    reference the destroyed broadcasts/persisted frames, and serving
-    one after this call would fail at evaluation time."""
+    payloads: cached and checkpointed DataFrames are released
+    (:func:`release`), broadcasts destroyed (payloads may be bare
+    objects, DataFrames, Broadcasts, or tuples of them).  This — not
+    ``spark._smsp_model_cache.clear()`` — is the supported way to drop
+    models (a bare ``clear()`` orphans the persisted blocks in the
+    BlockManager with no reachable handle).  The plan memo is dropped
+    WITH the models: memoized plans may reference the destroyed
+    broadcasts/persisted frames, and serving one after this call would
+    fail at evaluation time."""
     getattr(spark, "_smsp_plan_cache", {}).clear()
     mc = getattr(spark, "_smsp_model_cache", None)
     if not mc:
@@ -166,27 +210,10 @@ def clear_model_cache(spark: SparkSession) -> None:
         parts = value if isinstance(value, tuple) else (value,)
         for p in parts:
             if isinstance(p, DataFrame):
-                p.unpersist(blocking=False)
-                _release_checkpoint_blocks(p)
-            elif isinstance(p, Releasable):  # non-frame resources
-                p.release()
+                release(p)
             elif hasattr(p, "destroy") and hasattr(p, "value"):  # Broadcast
                 p.destroy()
     mc.clear()
-
-
-def _release_checkpoint_blocks(df: DataFrame) -> None:
-    """Free the executor blocks behind a ``localCheckpoint``'d model
-    frame.  ``DataFrame.unpersist()`` above covers only CacheManager
-    entries; checkpointed frames never register there — their blocks
-    hang off the LogicalRDD's backing RDD and would otherwise linger
-    until the ContextCleaner GCs it (ADVICE r11)."""
-    try:
-        analyzed = df._jdf.queryExecution().analyzed()
-        if analyzed.getClass().getSimpleName() == "LogicalRDD":
-            analyzed.rdd().unpersist(False)
-    except Exception:
-        pass  # session stopped / non-checkpoint plan — nothing to free
 
 
 def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
@@ -195,36 +222,25 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
             raise ValueError(f"duplicate query name {name!r}")
 
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # Cache hygiene between registry calls: unpersist only the
-            # intermediates a PRIOR registry query persisted (tracked
-            # above).  By the time the next query is requested, the
-            # previous result is materialized, so this releases executor
-            # memory without evicting anything still needed — and without
-            # touching caches created outside the registry.
-            # REENTRANCY: only the OUTERMOST registered call sweeps —
-            # a registered fn that composes another registered query
-            # (the certificate pattern) must not have its own tracked
-            # persists or conf-restoring cleanups torn down
-            # mid-construction by the nested call.
-            global _CALL_DEPTH
-            if _CALL_DEPTH == 0:
-                while _TRACKED_PERSISTS:
-                    _TRACKED_PERSISTS.pop().unpersist(blocking=False)
-                while _DEFERRED_CLEANUPS:
-                    _DEFERRED_CLEANUPS.pop()()
+            # Query scope (module docstring): only the caller's
+            # OUTERMOST call releases its previous call's state — a
+            # nested registered call (the certificate pattern) must not
+            # tear down state its composing query is still building on.
+            scope = _scope()
+            nested = scope.open
+            if not nested:
+                _release_scope(scope)
             # Plan memoization (prepared-statement reuse): DataFrames
             # are immutable LAZY plans, so re-serving one is
             # semantically identical to rebuilding it, while skipping
             # the per-call py4j expression construction + analysis
             # (50-700 ms — up to half a floor-class query's wall).
             # Stored on the session object like the reader cache, so
-            # entries die with the session.  A query that registered
-            # persists or cleanups DURING construction (detected by
-            # list growth across fn, which nesting cannot mask since
-            # nested calls never drain) is NOT cached: its returned
+            # entries die with the session.  A call that added release
+            # callbacks during construction is NOT cached: its returned
             # plan depends on query-scoped state (scratch spools, conf
-            # overrides, persisted intermediates) that the next
-            # outermost registry call tears down.
+            # overrides, persisted intermediates) that the caller's
+            # next outermost registry call tears down.
             cache = getattr(spark, "_smsp_plan_cache", None)
             if cache is None:
                 cache = {}
@@ -254,17 +270,13 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
             cached = cache.get(key)
             if cached is not None:
                 return cached
-            before = (len(_TRACKED_PERSISTS), len(_DEFERRED_CLEANUPS))
-            _CALL_DEPTH += 1
+            added = len(scope.releases)
+            scope.open = True
             try:
                 df = fn(spark, sf_dir)
             finally:
-                _CALL_DEPTH -= 1
-            registered_state = (
-                len(_TRACKED_PERSISTS),
-                len(_DEFERRED_CLEANUPS),
-            ) != before
-            if not registered_state:
+                scope.open = nested
+            if len(scope.releases) == added:
                 cache[key] = df
             return df
 

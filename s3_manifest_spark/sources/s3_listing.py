@@ -106,15 +106,51 @@ def make_boto3_client_factory(
     return factory
 
 
+#: S3 error codes that name a throttle or a server fault — worth a
+#: retry.  Any other code (AccessDenied, NoSuchBucket, ...) is terminal.
+_RETRYABLE_CODES = frozenset(
+    {
+        "SlowDown",
+        "Throttling",
+        "ThrottlingException",
+        "RequestLimitExceeded",
+        "RequestThrottled",
+        "TooManyRequestsException",
+        "InternalError",
+        "ServiceUnavailable",
+        "RequestTimeout",
+    }
+)
+
+
+def _retryable(exc: Exception) -> bool:
+    """Throttles, server faults (5xx) and transport faults are
+    retryable; everything else — terminal S3 errors and programming
+    errors alike — is not.  The S3 error code is read from a botocore
+    ``ClientError``'s ``response`` or, for other clients, ``exc.code``."""
+    if isinstance(exc, (ConnectionError, TimeoutError)):
+        return True
+    response = getattr(exc, "response", None)
+    if isinstance(response, dict):
+        if response.get("ResponseMetadata", {}).get("HTTPStatusCode", 0) >= 500:
+            return True
+        code = response.get("Error", {}).get("Code")
+    else:
+        code = getattr(exc, "code", None)
+    return code in _RETRYABLE_CODES
+
+
 def _retry(fn, attempts: int = 3, base_ms: int = 100):
     """Exponential backoff + jitter around an API call (main.rs:174,
-    196-206).  boto3 retries transport errors itself; this guards
-    non-boto clients and throttling responses uniformly."""
+    196-206) for retryable faults only (:func:`_retryable`); a terminal
+    error raises on the first attempt.  boto3 retries transport errors
+    itself; this guards non-boto clients and throttling responses
+    uniformly."""
     for attempt in range(attempts):
         try:
             return fn()
-        except Exception:
-            if attempt == attempts - 1:
+        except Exception as exc:
+            if attempt == attempts - 1 or not _retryable(exc):
                 raise
             delay = (base_ms / 1000.0) * (2**attempt) * (0.5 + random.random())
             time.sleep(delay)

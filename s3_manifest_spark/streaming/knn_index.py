@@ -70,7 +70,7 @@ from s3_manifest_spark.operators.similarity import (
     _pack_buckets_salted,
     knn_graph_ann_neighbors,
 )
-from s3_manifest_spark.registry import defer_cleanup, register
+from s3_manifest_spark.registry import defer_cleanup, register, release
 from s3_manifest_spark.sources.tables import load_table, parquet_row_count
 from s3_manifest_spark.streaming.metrics import record_progress
 from s3_manifest_spark.streaming.scratch import build_spool, scratch_base
@@ -331,23 +331,11 @@ def release_refresh_inputs(refreshed: DataFrame, prev_packed=None) -> None:
     """Free the blocks a :func:`refresh_knn_index` call pinned, AFTER
     ``refreshed`` has been materialized: the internal append checkpoint
     (riding on the frame as ``_smsp_refresh_append``) and, when the
-    caller passes it, the superseded served relation.  Both release
-    paths per the r16 rule — ``unpersist`` covers store-loaded
-    (plan-keyed persisted) frames, the checkpoint release covers
-    session-built LogicalRDDs; each is a no-op for the other shape."""
-    from s3_manifest_spark.registry import _release_checkpoint_blocks
-
-    targets = [getattr(refreshed, "_smsp_refresh_append", None)]
-    if prev_packed is not None:
-        targets.append(prev_packed)
-    for df in targets:
-        if df is None:
-            continue
-        try:
-            df.unpersist(blocking=False)
-        except Exception:
-            pass
-        _release_checkpoint_blocks(df)
+    caller passes it, the superseded served relation — store-loaded
+    or session-built (:func:`~s3_manifest_spark.registry.release`)."""
+    for df in (getattr(refreshed, "_smsp_refresh_append", None), prev_packed):
+        if df is not None:
+            release(df)
     if getattr(refreshed, "_smsp_refresh_append", None) is not None:
         refreshed._smsp_refresh_append = None
 

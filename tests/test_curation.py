@@ -277,7 +277,7 @@ def test_global_ordinal_dense_and_order_correct(spark):
 
     rows = [(i % 7, i) for i in range(123)]  # duplicate keys on k
     df = spark.createDataFrame(rows, "k int, v int")
-    got = global_ordinal(df, ["k", "v"], eager_cleanup=True).toPandas()
+    got = global_ordinal(df, ["k", "v"]).toPandas()
     assert sorted(got["position"]) == list(range(123))
     ordered = got.sort_values("position")
     assert list(ordered[["k", "v"]].itertuples(index=False, name=None)) == sorted(rows)

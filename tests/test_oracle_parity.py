@@ -19,11 +19,11 @@ SF_DIR = "/root/testdata/sf0.001"
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
-def _duck(sql: str) -> pd.DataFrame:
+def _duck(sql: str, sf_dir: str = SF_DIR) -> pd.DataFrame:
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
     return con.execute(sql).df()
 

@@ -39,9 +39,7 @@ def test_matches_numpy_linear_interpolation(spark, rows):
     # small partition count on purpose: groups must straddle partitions
     got = {
         (r["g"], r["p"]): r["q"]
-        for r in group_percentiles(
-            df, PCTS, partitions=3, eager_cleanup=True
-        ).collect()
+        for r in group_percentiles(df, PCTS, partitions=3).collect()
     }
     by_g: dict[str, list[float]] = {}
     for g, v in rows:
@@ -65,7 +63,6 @@ def test_duplicate_values_and_singletons(spark):
             spark.createDataFrame(rows, "g string, v double"),
             (0.5,),
             partitions=2,
-            eager_cleanup=True,
         ).collect()
     }
     assert got[("a", 0.5)] == 5.0

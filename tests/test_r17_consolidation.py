@@ -142,37 +142,6 @@ def test_fused_certificate_single_agg_and_values(spark):
     assert "Join" not in plan[:first_agg]
 
 
-def test_prefer_parallel_exchanges_scoped_and_reentrant(spark, sf_dir):
-    """The CPU-dense opt-out from size-driven AQE coalescing: sets
-    parallelism-first for the query's execution, restores the session
-    value at the next registry invocation, and a nested second call is
-    a no-op (no double-defer, no restore of the override itself)."""
-    from s3_manifest_spark import registry
-
-    registry.load_all()
-    key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    old = spark.conf.get(key, None)
-    try:
-        spark.conf.set(key, "false")
-        registry.prefer_parallel_exchanges(spark)
-        assert spark.conf.get(key) == "true"
-        registry.prefer_parallel_exchanges(spark)  # re-entrant no-op
-        assert spark.conf.get(key) == "true"
-        # next registry invocation drains the deferred restore
-        registry.QUERIES["filter_pushdown"](spark, sf_dir).count()
-        assert spark.conf.get(key) == "false"
-        # the three CPU-dense queries opt out during their build
-        registry.QUERIES["dedup_ngram_jaccard"](spark, sf_dir)
-        assert spark.conf.get(key) == "true"
-        registry.QUERIES["filter_pushdown"](spark, sf_dir).count()
-        assert spark.conf.get(key) == "false"
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
-
-
 def test_drain_confs_scoped_and_restored(spark):
     """The drain conf manager must apply the drain-scoped settings
     (few state partitions, no trailing no-data micro-batch) inside the

@@ -3,12 +3,16 @@ driver relies on without ever being able to assert them itself."""
 
 from __future__ import annotations
 
+import random
 import re
+import threading
 
 import pytest
 
 import __spark_entry__ as entrymod
+from conftest import SF_ORACLE
 from s3_manifest_spark import registry
+from test_oracle_parity import _compare, _duck
 
 SF = "/root/testdata/sf0.001"
 
@@ -39,17 +43,32 @@ def test_registered_wrappers_keep_metadata(q):
         assert callable(fn)
 
 
-def test_tracked_persists_are_released_on_next_call(spark, q):
+def _cached(spark, df) -> bool:
+    """True iff ``df``'s plan has a CacheManager entry."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    return cm.lookupCachedData(df._jdf).isDefined()
+
+
+def test_tracked_persists_are_released_on_next_call(spark, q, monkeypatch):
     """dedup_incremental persists its probe intermediates via
     track_persist; invoking ANY other registry query afterwards must
     release those blocks.  (dedup_minhash_lsh, the previous subject,
     persists only when the document-frequency cap binds — r18 made the
     inert-cap path read the session shingle checkpoint directly.)"""
+    from s3_manifest_spark.operators import dedup
+
+    tracked = []
+
+    def recording_track_persist(df):
+        tracked.append(df)
+        return registry.track_persist(df)
+
+    monkeypatch.setattr(dedup, "track_persist", recording_track_persist)
     df = q["dedup_incremental"](spark, SF)
     df.count()  # materialize → probe intermediates persisted
-    assert len(registry._TRACKED_PERSISTS) >= 1
+    assert tracked and all(_cached(spark, t) for t in tracked)
     q["hash_join"](spark, SF).count()
-    assert len(registry._TRACKED_PERSISTS) == 0
+    assert not any(_cached(spark, t) for t in tracked)
 
 
 def test_duplicate_registration_rejected():
@@ -304,8 +323,9 @@ def test_cached_sort_meta_blocks_freed_by_clear(spark):
     """cached_sort_meta pins its sorted layout via localCheckpoint —
     whose blocks a DataFrame.unpersist() can NOT release (checkpointed
     RDDs never register in the CacheManager).  clear_model_cache must
-    free them through the Releasable RDD handle, or every bench cold
-    run leaks a sorted copy of the relation into executor memory."""
+    free them through the frame's backing RDD (registry.release), or
+    every bench cold run leaks a sorted copy of the relation into
+    executor memory."""
     from pyspark.sql import functions as F
 
     from s3_manifest_spark.operators.sort_offsets import cached_sort_meta
@@ -334,8 +354,7 @@ def _frame_stored(spark, df) -> bool:
     """True iff a model frame still has executor storage: either a
     CacheManager entry (persist) or a storage-levelled LogicalRDD
     (localCheckpoint)."""
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    if cm.lookupCachedData(df._jdf).isDefined():
+    if _cached(spark, df):
         return True
     analyzed = df._jdf.queryExecution().analyzed()
     if analyzed.getClass().getSimpleName() == "LogicalRDD":
@@ -352,8 +371,8 @@ def test_session_models_survive_registry_sweeps(spark):
     sweep time — the model key survives, its blocks vanish, and every
     later call re-pays the full lineage (r11 bench served
     graph_pagerank cold on all 5 reps); (2) a trainer registering its
-    own frames with the sweeper (bigram_lm's old track_cleanup) evicts
-    itself at the very next registered call.  Model frames therefore
+    own frames with the query scope's release list (bigram_lm's old
+    form) evicts itself at the very next registered call.  Model frames therefore
     localCheckpoint, and this test asserts they keep executor storage
     across the queries that used to clobber them."""
     from pyspark.sql import DataFrame
@@ -411,3 +430,241 @@ def test_session_models_survive_registry_sweeps(spark):
     assert not still_stored, (
         f"clear_model_cache left checkpoint blocks resident: {still_stored}"
     )
+
+
+def test_prefer_parallel_exchanges_scoped_and_reentrant(spark, sf_dir):
+    """The CPU-dense opt-out from size-driven AQE coalescing: sets
+    parallelism-first for the query's execution, restores the session
+    value at the next registry invocation, and a nested second call is
+    a no-op (no double-defer, no restore of the override itself).
+    star_join_revenue's threshold swap rides the same scoped_conf: the
+    static threshold comes back, and the OPTIONAL adaptive threshold
+    returns to unset when it was unset (an explicit value would change
+    every later query's AQE broadcast conversion)."""
+    registry.load_all()
+    key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
+    static_key = "spark.sql.autoBroadcastJoinThreshold"
+    adaptive_key = "spark.sql.adaptive.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key, None)
+    old_adaptive = spark.conf.get(adaptive_key, None)
+    try:
+        spark.conf.set(key, "false")
+        registry.prefer_parallel_exchanges(spark)
+        assert spark.conf.get(key) == "true"
+        registry.prefer_parallel_exchanges(spark)  # re-entrant no-op
+        assert spark.conf.get(key) == "true"
+        # next registry invocation drains the deferred restore
+        registry.QUERIES["filter_pushdown"](spark, sf_dir).count()
+        assert spark.conf.get(key) == "false"
+        # the three CPU-dense queries opt out during their build
+        registry.QUERIES["dedup_ngram_jaccard"](spark, sf_dir)
+        assert spark.conf.get(key) == "true"
+        registry.QUERIES["filter_pushdown"](spark, sf_dir).count()
+        assert spark.conf.get(key) == "false"
+        # star_join_revenue: static off for its build, adaptive takes
+        # the static value; both restored, adaptive to UNSET
+        spark.conf.unset(adaptive_key)
+        static = spark.conf.get(static_key)
+        registry.QUERIES["star_join_revenue"](spark, sf_dir)
+        assert spark.conf.get(static_key) == "-1"
+        assert spark.conf.get(adaptive_key, None) == static
+        registry.QUERIES["filter_pushdown"](spark, sf_dir).count()
+        assert spark.conf.get(static_key) == static
+        assert spark.conf.get(adaptive_key, None) is None
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+        if old_adaptive is None:
+            spark.conf.unset(adaptive_key)
+        else:
+            spark.conf.set(adaptive_key, old_adaptive)
+
+
+def test_scope_stress_each_caller_releases_only_its_own():
+    """Scope bookkeeping under thread churn, no JVM: 16 threads (more
+    than cores) each make 200 outermost registered calls that add one
+    release callback apiece, with a shortened switch interval.  Every
+    callback must run exactly once, and on its OWN thread (its caller's
+    next call) unless the owner has exited (any caller's next call)."""
+    import sys
+    import types
+
+    conf = types.SimpleNamespace(get=lambda key, default=None: default)
+    fake_spark = types.SimpleNamespace(
+        conf=conf, sparkContext=types.SimpleNamespace(defaultParallelism=1)
+    )
+    ran: list = []
+    lock = threading.Lock()
+
+    def add_release(spark, sf_dir):
+        owner = threading.current_thread()
+
+        def _release():
+            with lock:
+                ran.append((owner, threading.current_thread(), owner.is_alive()))
+
+        registry.defer_cleanup(_release)
+
+    name = "_scope_stress_probe"
+    registry.register(name)(add_release)
+    n_threads, n_calls = 16, 200
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        query = registry.QUERIES[name]
+        threads = [
+            threading.Thread(
+                target=lambda: [query(fake_spark, "x") for _ in range(n_calls)]
+            )
+            for _ in range(n_threads)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+        assert not any(t.is_alive() for t in threads), "stress threads hung"
+        query(fake_spark, "x")  # releases the exited threads' last callbacks
+    finally:
+        sys.setswitchinterval(old_interval)
+        registry.QUERIES.pop(name, None)
+    foreign = [(o.name, r.name) for o, r, alive in ran if r is not o and alive]
+    assert not foreign, f"callbacks released by another live caller: {foreign[:5]}"
+    per_owner = {t: sum(o is t for o, _, _ in ran) for t in threads}
+    assert all(n == n_calls for n in per_owner.values()), per_owner
+
+
+def test_concurrent_caller_keeps_its_scope(spark):
+    """One caller's outermost call releases only ITS OWN pending state:
+    thread A builds stream_cdc_apply_live (whose lazy result reads a
+    scratch spool released with A's scope), thread B then runs a
+    registered query, and only then does A evaluate its result — which
+    must still match the oracle (a module-global release list let B's
+    call delete A's spool: FILE_NOT_EXIST)."""
+    registry.load_all()
+    name = "stream_cdc_apply_live"
+    built, b_done = threading.Event(), threading.Event()
+    out: dict = {}
+
+    def caller_a():
+        try:
+            df = registry.QUERIES[name](spark, SF_ORACLE)
+            built.set()
+            assert b_done.wait(600), "caller B never finished"
+            out["a"] = df.toPandas()
+        except BaseException as e:  # surfaced by the main thread
+            out["a_error"] = e
+        finally:
+            built.set()
+
+    def caller_b():
+        try:
+            assert built.wait(600), "caller A never built"
+            registry.QUERIES["hash_join"](spark, SF_ORACLE).count()
+        except BaseException as e:
+            out["b_error"] = e
+        finally:
+            b_done.set()
+
+    threads = [threading.Thread(target=caller_a), threading.Thread(target=caller_b)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(900)
+        assert not t.is_alive(), "caller thread did not finish"
+    for err in ("a_error", "b_error"):
+        if err in out:
+            raise out[err]
+    _compare(name, out["a"], _duck(registry.ORACLES[name], SF_ORACLE))
+
+
+def test_exited_thread_scope_released_by_next_call(spark, monkeypatch, tmp_path):
+    """State left by a caller thread that has since exited is released
+    by the next registered call on any thread: nothing leaks that a
+    module-global release would have freed."""
+    registry.load_all()
+    monkeypatch.setenv("TMPDIR", str(tmp_path))  # scratch_base() → tmp_path
+    out: dict = {}
+
+    def worker():
+        df = registry.QUERIES["stream_cdc_apply_live"](spark, SF_ORACLE)
+        out["rows"] = len(df.toPandas())
+
+    t = threading.Thread(target=worker)
+    t.start()
+    t.join(900)
+    assert not t.is_alive(), "worker thread did not finish"
+    assert out.get("rows", 0) > 0
+    spools = list(tmp_path.glob("smsp-cdc-snap-*"))
+    assert spools, "the worker's drain spool should outlive the worker"
+    registry.QUERIES["hash_join"](spark, SF).count()
+    assert not [p for p in spools if p.exists()]
+
+
+#: Registered queries for the concurrent mix: every kind of query-scoped
+#: state (scratch spool, tracked persists, pinned partitions, conf
+#: overrides, session models) next to plain memoized plans.
+_MIX = (
+    "stream_cdc_apply_live",
+    "dedup_incremental",
+    "shuffle_epoch",
+    "dedup_clusters",
+    "dedup_ngram_jaccard",
+    "star_join_revenue",
+    "percentile_dist_exact",
+    "hash_join",
+    "agg_groupby",
+    "set_ops",
+)
+
+
+def test_concurrent_query_mix_matches_oracle(spark):
+    """8 threads each run a seeded mix of registered queries on ONE
+    session at sf0.01; every result is hash-checked against its DuckDB
+    oracle.  Session confs the scoped queries override are restored
+    afterwards (concurrent overrides change plan shape, not answers —
+    registry module docstring)."""
+    registry.load_all()
+    rng = random.Random(20260417)
+    plans = [rng.sample(_MIX, 3) for _ in range(8)]
+    expected = {
+        n: _duck(registry.ORACLES[n], SF_ORACLE)
+        for n in sorted({n for plan in plans for n in plan})
+    }
+    conf_keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.adaptive.coalescePartitions.parallelismFirst",
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    )
+    saved = {k: spark.conf.get(k, None) for k in conf_keys}
+    start = threading.Barrier(len(plans))
+    errors: list = []
+
+    def caller(plan):
+        try:
+            start.wait(60)
+            for name in plan:
+                got = registry.QUERIES[name](spark, SF_ORACLE).toPandas()
+                _compare(name, got, expected[name])
+        except BaseException as e:
+            errors.append(e)
+
+    threads = [threading.Thread(target=caller, args=(p,)) for p in plans]
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(1800)
+        assert not any(t.is_alive() for t in threads), "caller threads hung"
+        # the exited callers' scopes are released by this call
+        registry.QUERIES["hash_join"](spark, SF).count()
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    if errors:
+        raise errors[0]

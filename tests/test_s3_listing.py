@@ -106,7 +106,7 @@ def test_manifest_from_s3_end_to_end(spark, tmp_path):
     assert r0.Size >= 0 and r0.LastModified.year == 2024
 
 
-def test_retry_gives_up_then_succeeds(spark):
+def test_retry_gives_up_then_succeeds():
     class Flaky(FakeS3Client):
         calls = 0
 
@@ -119,6 +119,81 @@ def test_retry_gives_up_then_succeeds(spark):
     c = Flaky(synth_bucket())
     shards, direct = discover_shards(c, "fake-bucket", "", target_shards=5)
     assert len(shards) == 7 and len(direct) == 20
+
+
+class _CodedError(Exception):
+    """A non-boto client's S3 error: the code rides on ``exc.code``."""
+
+    def __init__(self, code: str):
+        super().__init__(code)
+        self.code = code
+
+
+class _ClientError(Exception):
+    """botocore ``ClientError``'s shape: the code rides on ``response``."""
+
+    def __init__(self, code: str, status: int):
+        super().__init__(code)
+        self.response = {
+            "Error": {"Code": code},
+            "ResponseMetadata": {"HTTPStatusCode": status},
+        }
+
+
+class _FailsFirst(FakeS3Client):
+    """Raises ``exc`` on the first ``fails`` calls, then answers."""
+
+    def __init__(self, exc: Exception, fails: int = 1):
+        super().__init__(synth_bucket())
+        self.exc, self.fails, self.calls = exc, fails, 0
+
+    def list_objects_v2(self, **kw):
+        self.calls += 1
+        if self.calls <= self.fails:
+            raise self.exc
+        return super().list_objects_v2(**kw)
+
+
+@pytest.mark.parametrize(
+    "exc",
+    [
+        _CodedError("AccessDenied"),
+        _ClientError("AccessDenied", 403),
+        _ClientError("NoSuchBucket", 404),
+        TypeError("bad argument"),
+        KeyError("Contents"),
+    ],
+    ids=["access_denied_code", "access_denied_client", "no_such_bucket",
+         "type_error", "key_error"],
+)
+def test_retry_terminal_error_raises_on_first_attempt(monkeypatch, exc):
+    monkeypatch.setattr("s3_manifest_spark.sources.s3_listing.time.sleep",
+                        lambda s: None)
+    c = _FailsFirst(exc, fails=10)
+    with pytest.raises(type(exc)):
+        discover_shards(c, "fake-bucket", "", target_shards=1)
+    assert c.calls == 1
+
+
+@pytest.mark.parametrize(
+    "exc",
+    [
+        _CodedError("SlowDown"),
+        _ClientError("SlowDown", 503),
+        _ClientError("InternalError", 500),
+        ConnectionError("reset"),
+        TimeoutError("read timed out"),
+    ],
+    ids=["slowdown_code", "slowdown_client", "internal_error",
+         "connection_error", "timeout_error"],
+)
+def test_retry_transient_fault_retried_then_succeeds(monkeypatch, exc):
+    monkeypatch.setattr("s3_manifest_spark.sources.s3_listing.time.sleep",
+                        lambda s: None)
+    c = _FailsFirst(exc, fails=2)
+    shards, direct = discover_shards(c, "fake-bucket", "", target_shards=1)
+    assert c.calls >= 3
+    assert shards and len(direct) == 20
 
 
 def test_manifest_observed_stats_single_job(spark, tmp_path):

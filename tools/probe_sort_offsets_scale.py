@@ -82,7 +82,7 @@ def compaction_core(pf):
     import numpy as np
 
     parts = int(CPUS)
-    data = pinned_range_sort(pf, parts, ["prefix", "key", "size"], eager_cleanup=True)
+    data = pinned_range_sort(pf, parts, ["prefix", "key", "size"])
     meta = partition_weights(data, ["prefix"], F.sum("size"))
     offsets, _ = exclusive_offsets(meta, "prefix")
     b_off = spark.sparkContext.broadcast(offsets)
@@ -150,7 +150,7 @@ gv10 = copies(gv1, "v", lambda i: F.col("v") + F.lit(i) * F.lit(0.0000001))
 
 
 def pct_core(df):
-    out = group_percentiles(df, eager_cleanup=True)
+    out = group_percentiles(df)
     return out.count(), None
 
 
