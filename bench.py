@@ -660,9 +660,6 @@ def main() -> int:
             "membership_joins_sec": _floors.get(
                 "cert:knn_sampled_membership"
             ),
-            "query_pack_build_sec": _floors.get(
-                "cert:knn_query_pack_build"
-            ),
             "certificate_query_sec_same_session": _floors.get(
                 "q:knn_graph_ann_sampled"
             ),
@@ -670,7 +667,8 @@ def main() -> int:
         }
     # r17 (VERDICT r16 item 1): the sampled certificate's warm wall,
     # itemized against null-work floors in one interleaved session
-    # (tools/probe_sampled_decompose.py) after the broadcast-kernel
+    # (the committed KNN_SAMPLED_DECOMPOSE.json, written by the since
+    # retired tools/probe_sampled_decompose.py) after the broadcast-kernel
     # sweep + driver-local pack/exact/membership shaves.  fixed =
     # null_index_pass (Arrow/kernel/job floor of ANY probe of the
     # served index, |S|-invariant) + cert_given_sweep (join/agg

@@ -88,7 +88,6 @@ _KINDS = {
     # must be probed with the planes it was packed under, never a
     # count re-derived from the current corpus file.
     "knn_ann_index": "frames+scalars",
-    "knn_query_pack": "frames+scalars",
     "ann_membership_knn": "frames+scalars",
     "ann_membership_knn_s": "frames+scalars",
     "ann_membership_lsh": "frames",
@@ -224,6 +223,10 @@ def load_models(
     for slug, meta in sorted(manifest.items()):
         key = tuple(meta["key"])
         if sf_dir is not None and len(key) >= 2 and key[1] != sf_dir:
+            continue
+        if key[0] not in _KINDS:
+            # a kind this version no longer caches (an older store's
+            # sampled query pack): nothing reads it, so it stays on disk
             continue
         kind = meta["kind"]
         base = os.path.join(store_dir, slug)

@@ -13,7 +13,7 @@ index_update.py foreachBatch pattern:
   registered drain takes it in ONE availableNow micro-batch (a day's
   ingest), and the multi-batch arrival path (one file per trigger) is
   pinned equal to the batch-built index by
-  tests/test_r15_knn_lifecycle.py — per-VECTOR closure (a vector's
+  tests/test_knn_graph.py — per-VECTOR closure (a vector's
   LSH signature derives only from its own embedding and the fixed
   seeded plane matrix) makes batch boundaries invisible to index
   content;
@@ -61,14 +61,10 @@ from pyspark.sql import functions as F
 from s3_manifest_spark.operators.similarity import (
     _KNN_ANN_CERT_SQL,
     KNN_ANN_SEED_OFFSET,
-    _ann_certificate,
     _ann_signatures,
-    _knn_ann_membership,
     _knn_ann_planes,
-    _knn_exact_cached,
-    _membership_cached,
+    _knn_certificate,
     _pack_buckets_salted,
-    knn_graph_ann_neighbors,
 )
 from s3_manifest_spark.registry import defer_cleanup, register, release
 from s3_manifest_spark.sources.tables import load_table, parquet_row_count
@@ -216,7 +212,7 @@ def delta_pack_knn_index(
     run through the same packer, which recomputes those buckets' salt
     counts at their NEW occupancy.  The result equals the full pack of
     (old ∪ new) exactly — pinned by
-    tests/test_r16_consolidation.py::test_delta_pack_equals_full_pack.
+    tests/test_knn_graph.py::test_delta_pack_equals_full_pack.
 
     Shuffle accounting: one broadcast semi/anti split of the served
     blocks by the (append-sized) touched-bucket set, one explode of
@@ -355,27 +351,7 @@ def stream_knn_index_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     spool = _spool_embeddings(spark, sf_dir)
     store = drain_embedding_feed(spark, spool, planes=p)
     packed = _pack_buckets_salted(read_knn_index_store(spark, store, p))
-    exact = _knn_exact_cached(spark, sf_dir)
-    membership = _membership_cached(
-        spark,
-        sf_dir,
-        "knn",
-        # the drained store's plane count IS p here (verified against
-        # the store metadata on every append/read), so the membership's
-        # should_find promise is stated at the width the sweep probes.
-        lambda: _knn_ann_membership(spark, sf_dir, exact, planes=p),
-        planes=p,
-        # corpus-wide kind — distributed, never a driver collect
-        # (ADVICE r17; see knn_graph_ann's call site).
-        localize=False,
-    )
-    cert = _ann_certificate(
-        knn_graph_ann_neighbors(
-            spark, sf_dir, index=(packed, p)
-        ).withColumnRenamed("vec_id", "query_id"),
-        membership.withColumnRenamed("vec_id", "query_id"),
-        # corpus-wide certificate, same as knn_graph_ann: never force
-        # the N·k sweep through a BroadcastExchange driver collect
-        broadcast_found=False,
-    )
-    return cert.withColumnRenamed("query_id", "vec_id")
+    # the drained store's plane count IS p here (verified against the
+    # store metadata on every append/read), so the membership's
+    # should_find promise is stated at the width the sweep probes.
+    return _knn_certificate(spark, sf_dir, (packed, p))

@@ -1,6 +1,7 @@
 """Unit tests for the round-13 extension batch: corpus text operators
 (gopher_quality_rules / ngram_corpus_topk / chunk_dedup_boilerplate),
-the exact kNN graph, per-label centroid stats, and triangle counting.
+per-label centroid stats, and triangle counting (the kNN-graph tests
+live in test_knn_graph.py).
 Oracle parity rides test_oracle_parity.py's sweep; these pin the
 semantics against independent pure-Python recomputations and the
 edge cases the oracles can't isolate (short docs, self-exclusion,
@@ -16,11 +17,7 @@ import numpy as np
 from s3_manifest_spark.operators import corpus as C
 from s3_manifest_spark.operators.dedup import dedup_ngram_jaccard
 from s3_manifest_spark.operators.graph import graph_triangles
-from s3_manifest_spark.operators.similarity import (
-    KNN_GRAPH_K,
-    embedding_centroid_stats,
-    knn_graph,
-)
+from s3_manifest_spark.operators.similarity import embedding_centroid_stats
 from s3_manifest_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -155,138 +152,6 @@ def test_chunk_boilerplate_short_doc_row(spark, monkeypatch):
     assert abs(res[2]["boilerplate_ratio"] - 0.5) < 1e-9
 
 
-# ------------------------------------------------------------------- kNN graph
-
-
-def test_knn_graph_matches_numpy(spark):
-    emb = load_table(spark, SF, "embeddings").collect()
-    ids = np.array([r["vec_id"] for r in emb], dtype="int64")
-    m = np.stack([np.asarray(r["embedding"], dtype="float64") for r in emb])
-    m /= np.linalg.norm(m, axis=1, keepdims=True)
-    sims = np.round(m @ m.T, 6)
-    res = knn_graph(spark, SF).toPandas()
-    assert set(res["vec_id"]) == set(ids.tolist())
-    by_q = {
-        q: sorted(
-            zip(g["neighbor_id"], g["cos_sim"]),
-            key=lambda kv: (-kv[1], kv[0]),
-        )
-        for q, g in res.groupby("vec_id")
-    }
-    for qi, qid in enumerate(ids):
-        row = sims[qi].copy()
-        cand = [(int(ids[j]), row[j]) for j in range(len(ids)) if ids[j] != qid]
-        want = sorted(cand, key=lambda kv: (-kv[1], kv[0]))[:KNN_GRAPH_K]
-        got = [(int(n), float(s)) for n, s in by_q[int(qid)]]
-        assert [n for n, _ in got] == [n for n, _ in want], qid
-        assert all(
-            abs(gs - ws) < 2e-6 for (_, gs), (_, ws) in zip(got, want)
-        ), qid
-
-
-def test_knn_graph_no_self_edges_and_k_rows(spark):
-    res = knn_graph(spark, SF).toPandas()
-    assert (res["vec_id"] != res["neighbor_id"]).all()
-    per = res.groupby("vec_id").size()
-    assert (per == KNN_GRAPH_K).all()
-
-
-def _knn_ann_numpy_reference(spark):
-    """Pure-numpy replica of the candidate-pair sweep: signatures from
-    the SAME seeded plane matrix, candidate set = Hamming <= radius,
-    per-vector top-k among candidates under the final order."""
-    from s3_manifest_spark.operators.similarity import (
-        KNN_ANN_MULTIPROBE,
-        KNN_ANN_SEED_OFFSET,
-        LSH_SEED,
-        _knn_ann_planes,
-    )
-
-    emb = load_table(spark, SF, "embeddings").collect()
-    ids = np.array([r["vec_id"] for r in emb], dtype="int64")
-    m = np.stack([np.asarray(r["embedding"], dtype="float64") for r in emb])
-    p = _knn_ann_planes(len(ids))
-    planes = np.random.RandomState(
-        LSH_SEED + KNN_ANN_SEED_OFFSET
-    ).standard_normal((p, m.shape[1]))
-    powers = 1 << np.arange(p, dtype=np.int64)
-    sigs = (((m @ planes.T) > 0) * powers).sum(axis=1)
-    mn = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-    sims = np.round(mn @ mn.T, 6)
-    ham = np.array(
-        [[bin(int(a ^ b)).count("1") for b in sigs] for a in sigs]
-    )
-    want: dict[int, list] = {}
-    for i, qid in enumerate(ids):
-        cand = [
-            (int(ids[j]), sims[i, j])
-            for j in range(len(ids))
-            if ids[j] != qid and ham[i, j] <= KNN_ANN_MULTIPROBE
-        ]
-        if cand:
-            want[int(qid)] = sorted(cand, key=lambda kv: (-kv[1], kv[0]))[
-                :KNN_GRAPH_K
-            ]
-    return want
-
-
-def test_knn_graph_ann_matches_numpy(spark):
-    """The production candidate-pair sweep must equal the numpy
-    reference EXACTLY: same candidates (seeded LSH buckets, Hamming <=
-    radius), same per-vector top-k order, same rounded scores."""
-    from s3_manifest_spark.operators.similarity import (
-        knn_graph_ann_neighbors,
-    )
-
-    want = _knn_ann_numpy_reference(spark)
-    res = knn_graph_ann_neighbors(spark, SF).toPandas()
-    by_q = {
-        int(q): sorted(
-            zip(g["neighbor_id"], g["cos_sim"]),
-            key=lambda kv: (-kv[1], kv[0]),
-        )
-        for q, g in res.groupby("vec_id")
-    }
-    assert set(by_q) == set(want)
-    for qid, w in want.items():
-        got = [(int(n), float(s)) for n, s in by_q[qid]]
-        assert [n for n, _ in got] == [n for n, _ in w], qid
-        assert all(
-            abs(gs - ws) < 2e-6 for (_, gs), (_, ws) in zip(got, w)
-        ), qid
-
-
-def test_knn_graph_ann_certificate_falsifies(spark):
-    """The registered knn_graph_ann entry is a completeness
-    certificate: all-true on the working sweep, and it must FLIP when
-    the sweep is deliberately broken (probe_radius=0 drops the 1-bit
-    flip probes the canonical membership still promises) — proving
-    the flag is load-bearing, not vacuously true."""
-    import __spark_entry__ as entrymod
-
-    from s3_manifest_spark.operators.similarity import (
-        _ann_certificate,
-        _knn_ann_membership,
-        _knn_exact_cached,
-        knn_graph_ann_neighbors,
-    )
-
-    cert = entrymod.queries()["knn_graph_ann"](spark, SF).toPandas()
-    assert set(cert.columns) == {"vec_id", "exact_kth_sim", "ann_complete_ok"}
-    assert len(cert) > 0
-    assert cert["ann_complete_ok"].all()
-
-    exact = _knn_exact_cached(spark, SF)
-    membership = _knn_ann_membership(spark, SF, exact)
-    broken = _ann_certificate(
-        knn_graph_ann_neighbors(spark, SF, probe_radius=0).withColumnRenamed(
-            "vec_id", "query_id"
-        ),
-        membership.withColumnRenamed("vec_id", "query_id"),
-    ).toPandas()
-    assert not broken["ann_complete_ok"].all()
-
-
 # ------------------------------------------------------------ centroid stats
 
 
@@ -349,26 +214,3 @@ def test_triangles_identity_sum(spark):
     total = int(res["triangle_count"].sum())
     assert total % 3 == 0
 
-
-def test_knn_sampled_certificate_equals_full_restricted(spark):
-    """The production-scale sampled certificate must equal the full
-    certificate restricted to the sampled vectors — the sampled exact
-    side (broadcast-query O(|S|N) pass) and the full O(N^2) graph
-    must agree on every sampled vector's k-th similarity and
-    completeness flag."""
-    import pandas as pd
-    import __spark_entry__ as entrymod
-
-    from s3_manifest_spark.operators.similarity import KNN_CERT_STRIDE
-
-    qs = entrymod.queries()
-    full = qs["knn_graph_ann"](spark, SF).toPandas()
-    sampled = qs["knn_graph_ann_sampled"](spark, SF).toPandas()
-    want = (
-        full[full["vec_id"] % KNN_CERT_STRIDE == 0]
-        .sort_values("vec_id")
-        .reset_index(drop=True)
-    )
-    got = sampled.sort_values("vec_id").reset_index(drop=True)
-    pd.testing.assert_frame_equal(got, want)
-    assert len(got) > 0 and got["ann_complete_ok"].all()

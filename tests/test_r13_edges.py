@@ -1,6 +1,7 @@
 """Edge-case pins for the r13 extension operators — the degenerate
-shapes the fixtures never isolate: tiny corpora, single-member
-groups, single-row covariance, identical documents and clique graphs.
+shapes the fixtures never isolate: single-member groups, single-row
+covariance, identical documents and clique graphs (the kNN-graph
+edge cases live in test_knn_graph.py).
 All synthetic frames route through monkeypatched loaders and call the
 module-level (unmemoized) functions, so nothing poisons the session
 plan cache (register() returns the raw fn)."""
@@ -8,7 +9,6 @@ plan cache (register() returns the raw fn)."""
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
 from s3_manifest_spark.operators import dedup as D
 from s3_manifest_spark.operators import graph as G
@@ -21,27 +21,6 @@ def _emb_df(spark, rows):
     return spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int"
     )
-
-
-def test_knn_graph_corpus_smaller_than_k(spark, monkeypatch):
-    """3 vectors, k=5: every vector emits exactly its 2 real
-    neighbors — the per-block partial top-k and the merge window must
-    not pad, duplicate, or drop under-full candidate sets."""
-    rows = [
-        (1, [1.0, 0.0], 0),
-        (2, [0.9, 0.1], 0),
-        (3, [0.0, 1.0], 0),
-    ]
-    monkeypatch.setattr(
-        S, "load_table", lambda s, d, n, widen=False: _emb_df(spark, rows)
-    )
-    out = S.knn_graph(spark, SF).toPandas()
-    per = out.groupby("vec_id").size()
-    assert (per == 2).all() and len(per) == 3
-    assert (out["vec_id"] != out["neighbor_id"]).all()
-    # vec 1's nearest is 2 (cos ~0.994), then 3
-    top1 = out[out["vec_id"] == 1].sort_values("cos_sim", ascending=False)
-    assert list(top1["neighbor_id"]) == [2, 3]
 
 
 def test_centroid_stats_single_member_label(spark, monkeypatch):
@@ -141,113 +120,3 @@ def test_attribution_all_purchase_user(spark, monkeypatch):
     assert res["first_touch_type"].isna().all()
     assert res["last_touch_id"].isna().all()
 
-
-def test_knn_graph_ann_zero_vector_yields_no_nan(spark, monkeypatch):
-    """The zero-norm guard in the shared block scorer (ADVICE r13) is
-    load-bearing: a zero vector must score cos 0 against everything —
-    never NaN, which would silently poison every ranking the block
-    pair touches."""
-    rows = [
-        (1, [1.0, 0.0], 0),
-        (2, [0.9, 0.1], 0),
-        (3, [0.0, 0.0], 0),  # zero vector
-        (4, [0.0, 1.0], 0),
-    ]
-    monkeypatch.setattr(
-        S, "load_table", lambda s, d, n, widen=False: _emb_df(spark, rows)
-    )
-    for fn in (S.knn_graph, S.knn_graph_ann_neighbors):
-        out = fn(spark, SF).toPandas()
-        assert out["cos_sim"].notna().all(), fn.__name__
-        assert (out["vec_id"] != out["neighbor_id"]).all()
-        # the zero vector's similarities are exactly 0 wherever it
-        # appears as a neighbor
-        z = out[out["neighbor_id"] == 3]
-        assert (z["cos_sim"] == 0.0).all()
-
-
-def test_knn_graph_ann_candidates_respect_probe_radius(spark, monkeypatch):
-    """Every (vec, neighbor) edge the candidate sweep emits must lie
-    within Hamming radius KNN_ANN_MULTIPROBE of the seeded signature
-    assignment — recomputed independently in numpy (the sweep may
-    RETURN fewer per vector than knn_graph; it must never return a
-    pair its buckets cannot have generated)."""
-    rng = np.random.RandomState(7)
-    rows = [
-        (int(i), [float(x) for x in rng.standard_normal(8)], 0)
-        for i in range(40)
-    ]
-    monkeypatch.setattr(
-        S, "load_table", lambda s, d, n, widen=False: _emb_df(spark, rows)
-    )
-    out = S.knn_graph_ann_neighbors(spark, SF).toPandas()
-    assert len(out) > 0
-    from s3_manifest_spark.sources.tables import parquet_row_count
-
-    p = S._knn_ann_planes(parquet_row_count(f"{SF}/embeddings.parquet"))
-    planes = np.random.RandomState(
-        S.LSH_SEED + S.KNN_ANN_SEED_OFFSET
-    ).standard_normal((p, 8))
-    m = np.array([r[1] for r in rows])
-    powers = 1 << np.arange(p, dtype=np.int64)
-    sigs = (((m @ planes.T) > 0) * powers).sum(axis=1)
-    sig_of = {r[0]: int(s) for r, s in zip(rows, sigs)}
-    for _, row in out.iterrows():
-        ham = bin(sig_of[row["vec_id"]] ^ sig_of[row["neighbor_id"]]).count("1")
-        assert ham <= S.KNN_ANN_MULTIPROBE, (row["vec_id"], row["neighbor_id"])
-
-
-def test_knn_graph_ann_hot_bucket_salting(spark, monkeypatch):
-    """A pathological hot bucket (every vector in one direction →
-    one LSH bucket) must split into capped sub-blocks WITHOUT
-    changing the output: same top-k as an uncapped all-in-one-bucket
-    sweep, and no packed block larger than the cap."""
-    import pandas as pd
-
-    rng = np.random.RandomState(11)
-    base = rng.standard_normal(8)
-    rows = [
-        (
-            int(i),
-            [float(x) for x in (base + 0.01 * rng.standard_normal(8))],
-            0,
-        )
-        for i in range(120)
-    ]
-    monkeypatch.setattr(
-        S, "load_table", lambda s, d, n, widen=False: _emb_df(spark, rows)
-    )
-    baseline = (
-        S.knn_graph_ann_neighbors(spark, SF)
-        .toPandas()
-        .sort_values(["vec_id", "cos_sim", "neighbor_id"])
-        .reset_index(drop=True)
-    )
-    monkeypatch.setattr(S, "KNN_ANN_MAX_BLOCK", 16)
-    capped = (
-        S.knn_graph_ann_neighbors(spark, SF)
-        .toPandas()
-        .sort_values(["vec_id", "cos_sim", "neighbor_id"])
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(capped, baseline)
-    # and the packed relation actually respected the cap
-    from s3_manifest_spark.sources.tables import parquet_row_count
-
-    p = S._knn_ann_planes(parquet_row_count(f"{SF}/embeddings.parquet"))
-    sigs = S._ann_signatures(
-        _emb_df(spark, rows).select("vec_id", "embedding"),
-        seed_offset=S.KNN_ANN_SEED_OFFSET,
-        planes=p,
-    ).withColumnRenamed("sig", "bucket")
-    packed = S._pack_buckets_salted(
-        sigs.select("vec_id", "embedding", "bucket")
-    ).toPandas()
-    sizes = packed["ids"].map(len)
-    # the salt hash balances sub-blocks in EXPECTATION (binomial
-    # spread around occ/nsalt) — a 120-member hot bucket at cap 16
-    # must land far below the uncapped 120, not exactly at 16
-    assert sizes.max() <= 2 * 16, sizes.tolist()
-    assert sizes.mean() <= 16, sizes.tolist()
-    # the hot direction really did concentrate: >1 sub-block per bucket
-    assert (packed.groupby("blk").size() > 1).any()

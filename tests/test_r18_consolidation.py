@@ -10,6 +10,9 @@
 - the LSH hyperplane matrix has ONE construction point
   (``_lsh_plane_matrix``) shared by driver-side probe derivation and
   the executor kernels.
+
+The corpus-wide kNN membership and fused-certificate pins live in
+test_knn_graph.py.
 """
 
 from __future__ import annotations
@@ -52,35 +55,6 @@ def test_membership_cache_localize_flag(spark, sf_dir):
     clear_model_cache(spark)
 
 
-def test_corpus_wide_membership_is_distributed(spark):
-    """The registered corpus-wide 'knn' kind must come back as a
-    distributed checkpoint, never a single-partition LocalRelation
-    (the exact configuration ADVICE r17 flagged as an unbounded
-    driver collect at the 100 TB design point)."""
-    from s3_manifest_spark.operators.similarity import (
-        _knn_ann_index_cached,
-        _knn_ann_membership,
-        _knn_exact_cached,
-        _membership_cached,
-    )
-    from s3_manifest_spark.registry import clear_model_cache
-
-    sf = "/root/testdata/sf0.001"
-    clear_model_cache(spark)
-    exact = _knn_exact_cached(spark, sf)
-    idx = _knn_ann_index_cached(spark, sf)
-    m = _membership_cached(
-        spark,
-        sf,
-        "knn",
-        lambda: _knn_ann_membership(spark, sf, exact, planes=idx[1]),
-        planes=idx[1],
-        localize=False,
-    )
-    assert _plan_node(m) == "LogicalRDD"
-    clear_model_cache(spark)
-
-
 def test_no_data_guard_append_aggregation(spark):
     """_drain_no_data_conf: append + streaming aggregation keeps
     Spark's default (the trailing no-data batch fires); every shape
@@ -97,62 +71,6 @@ def test_no_data_guard_append_aggregation(spark):
     assert _drain_no_data_conf(agg, "complete") == DRAIN_NO_DATA_BATCHES
     assert _drain_no_data_conf(agg, "update") == DRAIN_NO_DATA_BATCHES
     assert _drain_no_data_conf(plain, "append") == DRAIN_NO_DATA_BATCHES
-
-
-def test_fused_certificate_equals_join_path(spark, sf_dir):
-    """The corpus-wide certificate path (membership pre-fused with
-    cos_sim at build time + per-query found-set aggregation) must
-    produce row-identical output to the exact⋈membership⋈found join
-    semantics, recomputed here in pandas — on the working sweep AND on
-    a broken sweep (so the completeness flag stays falsifiable through
-    the fused shape)."""
-    from s3_manifest_spark.operators.similarity import (
-        _ann_certificate,
-        _knn_ann_membership,
-        _knn_exact_cached,
-        knn_graph_ann_neighbors,
-    )
-    from s3_manifest_spark.registry import clear_model_cache
-
-    clear_model_cache(spark)
-    exact = _knn_exact_cached(spark, sf_dir)
-    fused = _knn_ann_membership(spark, sf_dir, exact)
-    assert "cos_sim" in fused.columns  # production exact → fused build
-    exact_pdf = exact.select("vec_id", "neighbor_id", "cos_sim").toPandas()
-    bare = fused.select("vec_id", "neighbor_id", "should_find").toPandas()
-
-    for radius in (None, 0):  # working sweep, then broken (radius-0)
-        kwargs = {} if radius is None else {"probe_radius": radius}
-        ann = knn_graph_ann_neighbors(spark, sf_dir, **kwargs)
-        new = (
-            _ann_certificate(
-                ann.withColumnRenamed("vec_id", "query_id"),
-                fused.withColumnRenamed("vec_id", "query_id"),
-                broadcast_found=False,
-            )
-            .toPandas()
-            .sort_values("query_id")
-            .reset_index(drop=True)
-        )
-        # the join path: exact ⟕ membership ⟕ found, one groupBy
-        found = ann.select("vec_id", "neighbor_id").toPandas().assign(found=True)
-        j = exact_pdf.merge(bare, on=["vec_id", "neighbor_id"], how="left").merge(
-            found, on=["vec_id", "neighbor_id"], how="left"
-        )
-        j["ok"] = ~(j["should_find"].eq(True) & j["found"].isna())
-        old = (
-            j.groupby("vec_id")
-            .agg(exact_kth_sim=("cos_sim", "min"), ann_complete_ok=("ok", "min"))
-            .reset_index()
-            .rename(columns={"vec_id": "query_id"})
-        )
-        old["exact_kth_sim"] = old["exact_kth_sim"].round(6)
-        assert new["query_id"].tolist() == old["query_id"].tolist()
-        assert new["exact_kth_sim"].tolist() == old["exact_kth_sim"].tolist()
-        assert new["ann_complete_ok"].tolist() == old["ann_complete_ok"].tolist()
-        if radius == 0:  # the broken sweep must falsify
-            assert not new["ann_complete_ok"].all()
-    clear_model_cache(spark)
 
 
 def test_lsh_plane_matrix_single_construction_point(spark):

@@ -363,7 +363,7 @@ def main() -> int:
         _knn_ann_index_cached,
         _knn_ann_membership,
         _knn_exact_sampled,
-        _knn_query_pack_cached,
+        _knn_sampled_sweep,
     )
     from s3_manifest_spark.registry import session_model_cache
 
@@ -373,16 +373,10 @@ def main() -> int:
         ).toPandas()
 
     def sampled_sweep():
-        # the sampled certificate's actual warm sweep: broadcast the
-        # session-cached query pack against the served index
+        # the sampled certificate's actual warm sweep: the served index
+        # against the session-cached probe table of the sample
         idx = _knn_ann_index_cached(spark, sf)
-        exact = _knn_exact_sampled(spark, sf)
-        knn_graph_ann_neighbors(
-            spark,
-            sf,
-            index=idx,
-            probing_pack=_knn_query_pack_cached(spark, sf, exact, idx[1]),
-        ).toPandas()
+        _knn_sampled_sweep(spark, sf, idx).toPandas()
 
     def sampled_exact_blas():
         session_model_cache(spark).pop(("knn_exact_sampled", sf), None)
@@ -409,12 +403,6 @@ def main() -> int:
             lambda: _knn_ann_membership(spark, sf, exact, planes=idx[1]),
             planes=idx[1],
         ).toPandas()
-
-    def sampled_query_pack_build():
-        session_model_cache(spark).pop(("knn_query_pack", sf), None)
-        idx = _knn_ann_index_cached(spark, sf)
-        exact = _knn_exact_sampled(spark, sf)
-        _knn_query_pack_cached(spark, sf, exact, idx[1]).toPandas()
 
     legs = {
         "documents_python_pass": identity_docs,
@@ -459,7 +447,6 @@ def main() -> int:
         "ann:knn_sampled_sweep": sampled_sweep,
         "cert:knn_sampled_exact_blas": sampled_exact_blas,
         "cert:knn_sampled_membership": sampled_membership,
-        "cert:knn_query_pack_build": sampled_query_pack_build,
         "q:knn_graph_ann": run_query("knn_graph_ann"),
         "q:knn_graph_ann_sampled": run_query("knn_graph_ann_sampled"),
         "q:similarity_ann_lsh": run_query("similarity_ann_lsh"),

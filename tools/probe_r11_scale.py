@@ -153,7 +153,12 @@ print(f"heavy_hitters_cms: 1x={t1:.2f}s 10x={t10:.2f}s "
 # ---- embedding_matryoshka truncated pass over a 10x corpus ----------------
 from s3_manifest_spark.operators.similarity import (  # noqa: E402
     MRL_DIM,
-    _exact_topk_dims,
+    TOP_K,
+    _batch_vectors,
+    _merge,
+    _query_pdf,
+    _QueryState,
+    _scan,
 )
 
 e1 = load_table(spark, SF, "embeddings").select("vec_id", "embedding")
@@ -161,69 +166,17 @@ e10_path = None
 
 
 def mrl_core(v):
-    return _exact_topk_dims_over(v).count()
+    return _mrl_prefix_topk(v).count()
 
 
-def _exact_topk_dims_over(v):
-    # same machinery as the operator, parameterized on the relation
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import Window
-
-    from s3_manifest_spark.operators.similarity import (
-        MAX_QUERIES,
-        QUERY_STRIDE,
-        TOP_K,
+def _mrl_prefix_topk(v):
+    # the operator's own exact-family scan + merge at the MRL_DIM
+    # prefix, with the query state built from ``v``'s own query set
+    qids, _, qn = _batch_vectors(_query_pdf(v), MRL_DIM)
+    bc = spark.sparkContext.broadcast(
+        _QueryState(qids, qn, None, None, None, None, MRL_DIM)
     )
-
-    qpdf = (
-        v.filter(F.col("vec_id") % QUERY_STRIDE == 0)
-        .orderBy("vec_id")
-        .limit(MAX_QUERIES)
-        .toPandas()
-    )
-    qids = qpdf["vec_id"].to_numpy(dtype="int64")
-    qm = np.stack(qpdf["embedding"].to_numpy()).astype("float64")[:, :MRL_DIM]
-    qm /= np.linalg.norm(qm, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((qids, qm))
-    k = TOP_K
-
-    def score(batches):
-        ids_q, queries = bc.value
-        d = queries.shape[1]
-        for batch in batches:
-            nids = batch["vec_id"].to_numpy(dtype="int64")
-            e = np.stack(batch["embedding"].to_numpy()).astype("float64")[:, :d]
-            e /= np.linalg.norm(e, axis=1, keepdims=True)
-            sims = np.round(e @ queries.T, 6)
-            out_q, out_n, out_s = [], [], []
-            for j, qid in enumerate(ids_q):
-                keep = nids != qid
-                cand_ids, cand_sims = nids[keep], sims[keep, j]
-                order = np.lexsort((cand_ids, -cand_sims))[:k]
-                out_q.append(np.full(len(order), qid))
-                out_n.append(cand_ids[order])
-                out_s.append(cand_sims[order])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "cos_sim": np.concatenate(out_s),
-                }
-            )
-
-    scored = v.mapInPandas(
-        score, schema="query_id long, neighbor_id long, cos_sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.select("*", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return _merge(_scan(v, bc, TOP_K), TOP_K)
 
 
 e10 = copies(
